@@ -29,23 +29,17 @@ resurrection.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.txn import (
     Catalog,
-    ConcurrentCommitError,
     _detect_partition_cols,
     _version_dir,
+    retry_on_conflict,
 )
 
 _DV_SUFFIX = "__dv"
-# CAS-retry budget: under N-way same-table contention the last writer
-# needs ~N attempts, and a commit-lock collision (not just a moved
-# ref) also costs one — size generously, back off linearly
-_COMMIT_RETRIES = 16
 
 
 def dv_table(name: str) -> str:
@@ -105,47 +99,44 @@ def delete_where(
     the same snapshot. Without this, DELETE WHERE on a non-key column
     missed rows upserted INTO the predicate and wrongly deleted keys
     upserted OUT of it."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            # all reads go through the TRANSACTION'S snapshot
-            # (read_committed), so the union is of exactly the state
-            # the commit CASes against — no TOCTOU window between a
-            # current-head read and the snapshot
-            with cat.transaction(branch=branch) as t:
-                current = t.read_committed(spark, name)
-                try:
-                    # lazy import: mor_upsert imports this module
-                    from .mor_upsert import delta_table
 
-                    delta = t.read_committed(spark, delta_table(name))
-                    current = current.join(
-                        F.broadcast(delta.select(*key_cols)),
-                        on=list(key_cols),
-                        how="left_anti",
-                    ).unionByName(delta)
-                except FileNotFoundError:
-                    pass
-                keys = (
-                    current.filter(predicate)
-                    .select(*key_cols)
-                    .distinct()
-                )
-                try:
-                    existing = t.read_committed(spark, dv_table(name))
-                    keys = keys.unionByName(
-                        existing.select(*key_cols)
-                    ).distinct()
-                except FileNotFoundError:
-                    pass
-                t.overwrite(keys, dv_table(name))
-            # the manifest THIS commit published — not a head re-read,
-            # which a racing writer could have moved past (ADVICE r16)
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc  # ref moved (or lock contended): re-read, retry
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+    def attempt():
+        # all reads go through the TRANSACTION'S snapshot
+        # (read_committed), so the union is of exactly the state
+        # the commit CASes against — no TOCTOU window between a
+        # current-head read and the snapshot
+        with cat.transaction(branch=branch) as t:
+            current = t.read_committed(spark, name)
+            try:
+                # lazy import: mor_upsert imports this module
+                from .mor_upsert import delta_table
+
+                delta = t.read_committed(spark, delta_table(name))
+                current = current.join(
+                    F.broadcast(delta.select(*key_cols)),
+                    on=list(key_cols),
+                    how="left_anti",
+                ).unionByName(delta)
+            except FileNotFoundError:
+                pass
+            keys = (
+                current.filter(predicate)
+                .select(*key_cols)
+                .distinct()
+            )
+            try:
+                existing = t.read_committed(spark, dv_table(name))
+                keys = keys.unionByName(
+                    existing.select(*key_cols)
+                ).distinct()
+            except FileNotFoundError:
+                pass
+            t.overwrite(keys, dv_table(name))
+        # the manifest THIS commit published — not a head re-read,
+        # which a racing writer could have moved past (ADVICE r16)
+        return t.committed_manifest
+
+    return retry_on_conflict(attempt)
 
 
 def read_merged(
@@ -206,62 +197,59 @@ def compact_deletes(
     therefore rewritten as delta ANTI dv in the SAME atomic commit,
     so the logical row set ((base ANTI delta) ∪ delta) ANTI dv is
     identical on both sides of the swap."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                try:
-                    dv = t.read_committed(spark, dv_table(name))
-                    # footer-count fast path (no Spark job); falls back
-                    # to a scan when footers cannot answer (r19)
-                    nrows = t.committed_rows(dv_table(name))
-                except FileNotFoundError:
-                    return None
-                if nrows == 0 or (nrows is None and dv.isEmpty()):
-                    # nothing to fold — rewriting a 100 TB base to
-                    # apply zero deletes is not a no-op (r18)
-                    return None
-                from .positional_deletes import (
-                    guard_no_pending_positional_deletes,
-                )
 
-                guard_no_pending_positional_deletes(
-                    cat, spark, name, t._expected_head
-                )
-                merged = t.read_committed(spark, name).join(
-                    F.broadcast(dv), on=list(key_cols), how="left_anti"
-                )
-                t.overwrite(
-                    merged, name,
-                    base_partition_cols(cat, name, t._expected_head),
-                )
-                try:
-                    # lazy import: mor_upsert imports this module
-                    from .mor_upsert import delta_table
+    def attempt():
+        with cat.transaction(branch=branch) as t:
+            try:
+                dv = t.read_committed(spark, dv_table(name))
+                # footer-count fast path (no Spark job); falls back
+                # to a scan when footers cannot answer (r19)
+                nrows = t.committed_rows(dv_table(name))
+            except FileNotFoundError:
+                return None
+            if nrows == 0 or (nrows is None and dv.isEmpty()):
+                # nothing to fold — rewriting a 100 TB base to
+                # apply zero deletes is not a no-op (r18)
+                return None
+            from .positional_deletes import (
+                guard_no_pending_positional_deletes,
+            )
 
-                    delta = t.read_committed(spark, delta_table(name))
-                    # an EMPTY delta needs no rewrite — delta ANTI dv
-                    # is still empty, and the anti-join write job is
-                    # exactly the fixed per-commit cost this fold
-                    # exists to avoid (ADVICE r19; footer count, no
-                    # Spark job — falls through to the rewrite when
-                    # footers cannot answer)
-                    if t.committed_rows(delta_table(name)) != 0:
-                        t.overwrite(
-                            delta.join(
-                                F.broadcast(dv.select(*key_cols)),
-                                on=list(key_cols),
-                                how="left_anti",
-                            ),
-                            delta_table(name),
-                        )
-                except FileNotFoundError:
-                    pass
-                t.truncate(dv, dv_table(name))
-            # this commit's own manifest id (ADVICE r16), not a head
-            # re-read a racing writer could have advanced
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+            guard_no_pending_positional_deletes(
+                cat, spark, name, t._expected_head
+            )
+            merged = t.read_committed(spark, name).join(
+                F.broadcast(dv), on=list(key_cols), how="left_anti"
+            )
+            t.overwrite(
+                merged, name,
+                base_partition_cols(cat, name, t._expected_head),
+            )
+            try:
+                # lazy import: mor_upsert imports this module
+                from .mor_upsert import delta_table
+
+                delta = t.read_committed(spark, delta_table(name))
+                # an EMPTY delta needs no rewrite — delta ANTI dv
+                # is still empty, and the anti-join write job is
+                # exactly the fixed per-commit cost this fold
+                # exists to avoid (ADVICE r19; footer count, no
+                # Spark job — falls through to the rewrite when
+                # footers cannot answer)
+                if t.committed_rows(delta_table(name)) != 0:
+                    t.overwrite(
+                        delta.join(
+                            F.broadcast(dv.select(*key_cols)),
+                            on=list(key_cols),
+                            how="left_anti",
+                        ),
+                        delta_table(name),
+                    )
+            except FileNotFoundError:
+                pass
+            t.truncate(dv, dv_table(name))
+        # this commit's own manifest id (ADVICE r16), not a head
+        # re-read a racing writer could have advanced
+        return t.committed_manifest
+
+    return retry_on_conflict(attempt)

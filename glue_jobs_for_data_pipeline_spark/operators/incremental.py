@@ -17,9 +17,12 @@ merge); exact DISTINCT and percentiles are NOT algebraic and need their
 own structures (the catalog's count-distinct / percentile queries are
 full-recompute by design).
 
-Storage: each refresh commits through sources/txn.py's atomic pointer
-swap, so readers always see a complete rollup — never a half-merged
-one — and a failed refresh is a free rollback.
+Storage: every maintained table is a ``Catalog`` table, and each
+refresh reads it through its transaction snapshot and commits through
+one manifest swap (sources/txn.py), so readers always see a complete
+rollup — never a half-merged one — a failed refresh is a free
+rollback, and a racing refresh loses its CAS and retries from the
+fresh state instead of overwriting it.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources import txn
+from ..sources.txn import Catalog, retry_on_conflict
 
 
 def cdc_apply(
@@ -69,7 +72,8 @@ def cdc_apply(
 
 def dedup_ingest(
     spark: SparkSession,
-    store_dir: str,
+    cat: Catalog,
+    name: str,
     batch: DataFrame,
     id_col: str,
     fp_col: "F.Column",
@@ -81,7 +85,7 @@ def dedup_ingest(
 
     Per batch: collapse within the batch (min id per fingerprint — a
     batch can self-duplicate), LEFT ANTI against the stored fingerprint
-    set, append the admitted fingerprints through the atomic txn commit.
+    set, commit the extended store as catalog table ``name``.
     Cost is O(batch + matching store partitions): the anti-join shuffles
     16-byte fingerprints, never documents, and the store holds one row
     per distinct fingerprint ever admitted — the same
@@ -99,18 +103,24 @@ def dedup_ingest(
         .groupBy("fp")
         .agg(F.min(id_col).alias(id_col))
     )
-    if txn.current_version(store_dir) is None:
-        admitted = collapsed
-        new_store = collapsed.select("fp")
-    else:
-        stored = txn.read_committed(spark, store_dir)
-        admitted = collapsed.join(stored, "fp", "left_anti")
-        new_store = stored.unionByName(admitted.select("fp"))
-    txn.txn_overwrite(new_store, store_dir)
+
+    def attempt() -> DataFrame:
+        with cat.transaction() as t:
+            try:
+                stored = t.read_committed(spark, name)
+            except FileNotFoundError:  # first batch bootstraps the store
+                admitted = collapsed
+                new_store = collapsed.select("fp")
+            else:
+                admitted = collapsed.join(stored, "fp", "left_anti")
+                new_store = stored.unionByName(admitted.select("fp"))
+            t.overwrite(new_store, name)
+        return admitted
+
     # NOTE: the returned frame lazily reads the PRE-commit store version;
-    # txn keeps old versions on disk so this stays valid until vacuum()
-    # — collect/write it before vacuuming the store.
-    return admitted.select(id_col, "fp")
+    # it stays on disk until expire_snapshots()/gc_uncommitted() reclaims
+    # it — collect/write it before expiring the store's history.
+    return retry_on_conflict(attempt).select(id_col, "fp")
 
 
 def partial_aggs(
@@ -148,28 +158,36 @@ def merge_aggs(
 
 def refresh_rollup(
     spark: SparkSession,
-    rollup_dir: str,
+    cat: Catalog,
+    name: str,
     batch: DataFrame,
     keys: list[str],
     sum_cols: dict[str, str],
 ) -> DataFrame:
-    """Apply one batch to the stored rollup and commit atomically.
-    First call bootstraps the rollup from the batch alone. Returns the
-    newly committed state."""
+    """Apply one batch to the rollup stored as catalog table ``name``
+    and commit atomically. First call bootstraps the rollup from the
+    batch alone. Returns the newly committed state."""
     delta = partial_aggs(batch, keys, sum_cols)
     measures = list(sum_cols.values())
-    if txn.current_version(rollup_dir) is None:
-        merged = delta
-    else:
-        stored = txn.read_committed(spark, rollup_dir)
-        merged = merge_aggs(stored, delta, keys, measures)
-    txn.txn_overwrite(merged, rollup_dir)
-    return txn.read_committed(spark, rollup_dir)
+
+    def attempt() -> int:
+        with cat.transaction() as t:
+            try:
+                stored = t.read_committed(spark, name)
+            except FileNotFoundError:
+                merged = delta
+            else:
+                merged = merge_aggs(stored, delta, keys, measures)
+            t.overwrite(merged, name)
+        return t.committed_manifest
+
+    return cat.read_asof(spark, name, retry_on_conflict(attempt))
 
 
 def refresh_join(
     spark: SparkSession,
-    store_dir: str,
+    cat: Catalog,
+    name: str,
     a_batch: DataFrame,
     b_batch: DataFrame,
     key: str,
@@ -185,37 +203,39 @@ def refresh_join(
     probe side — never O(A ⋈ B) over history; J_old is appended to,
     not recomputed. At scale, store A and B bucketed on the key so the
     three delta joins are shuffle-free on the stored side, and swap
-    the J_old union for a partition-append (txn.stage_version of only
-    ΔJ under a partition scheme) once J outgrows rewrite-per-refresh —
-    the delta ALGEBRA is the part that carries to 100 TB.
+    the J_old union for ``CatalogTransaction.append`` of only ΔJ once
+    J outgrows rewrite-per-refresh — the delta ALGEBRA is the part that
+    carries to 100 TB.
 
-    All three tables (A, B, J) commit in ONE multi-table transaction:
+    J is catalog table ``name``; A and B are ``name__a`` / ``name__b``.
+    All three commit in ONE catalog transaction (one manifest swap):
     a reader never observes A containing a batch whose join
     contributions are missing from J. First call bootstraps the store.
     Returns the newly committed J.
     """
-    a_dir, b_dir, j_dir = (
-        f"{store_dir}/a",
-        f"{store_dir}/b",
-        f"{store_dir}/j",
-    )
-    if txn.current_version(j_dir) is None:
-        new_a, new_b = a_batch, b_batch
-        new_j = a_batch.join(b_batch, key)
-    else:
-        a_old = txn.read_committed(spark, a_dir)
-        b_old = txn.read_committed(spark, b_dir)
-        j_old = txn.read_committed(spark, j_dir)
-        delta_j = (
-            a_batch.join(b_old, key)
-            .unionByName(a_old.join(b_batch, key))
-            .unionByName(a_batch.join(b_batch, key))
-        )
-        new_a = a_old.unionByName(a_batch)
-        new_b = b_old.unionByName(b_batch)
-        new_j = j_old.unionByName(delta_j)
-    with txn.Transaction() as t:
-        t.overwrite(new_a, a_dir)
-        t.overwrite(new_b, b_dir)
-        t.overwrite(new_j, j_dir)
-    return txn.read_committed(spark, j_dir)
+    a_name, b_name = f"{name}__a", f"{name}__b"
+
+    def attempt() -> int:
+        with cat.transaction() as t:
+            try:
+                a_old = t.read_committed(spark, a_name)
+                b_old = t.read_committed(spark, b_name)
+                j_old = t.read_committed(spark, name)
+            except FileNotFoundError:  # first call bootstraps the store
+                new_a, new_b = a_batch, b_batch
+                new_j = a_batch.join(b_batch, key)
+            else:
+                delta_j = (
+                    a_batch.join(b_old, key)
+                    .unionByName(a_old.join(b_batch, key))
+                    .unionByName(a_batch.join(b_batch, key))
+                )
+                new_a = a_old.unionByName(a_batch)
+                new_b = b_old.unionByName(b_batch)
+                new_j = j_old.unionByName(delta_j)
+            t.overwrite(new_a, a_name)
+            t.overwrite(new_b, b_name)
+            t.overwrite(new_j, name)
+        return t.committed_manifest
+
+    return cat.read_asof(spark, name, retry_on_conflict(attempt))

@@ -32,17 +32,14 @@ merge instead of clobbering (proven in tests/test_mor_upsert.py).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ..sources.txn import Catalog, ConcurrentCommitError
+from ..sources.txn import Catalog, retry_on_conflict
 from .deletes import _read_dv_asof, base_partition_cols, dv_table
 
 _DELTA_SUFFIX = "__delta"
-_COMMIT_RETRIES = 16
 
 
 def delta_table(name: str) -> str:
@@ -88,56 +85,53 @@ def upsert_into(
     the dv and resurrected the stale row; compact_upserts-first
     dropped the upsert forever; ADVICE r17). Returns the commit's own
     manifest id."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                batch = _latest_per_key(updates, key_cols)
-                # CHECK constraints declared on the BASE table bind the
-                # logical rows this upsert introduces, even though the
-                # physical write targets the __delta side table —
-                # without this the delta was a constraint bypass whose
-                # violating rows later wedged every compaction
-                # (code-review r18)
-                t._enforce_constraints(batch, name)
-                if name not in cat._manifest_tables(t._expected_head):
-                    # first write IS the initial load
-                    t.overwrite(batch, name)
-                else:
-                    try:
-                        existing = t.read_committed(spark, delta_table(name))
-                        # the batch wins over the stored delta for its
-                        # keys
-                        merged = batch.unionByName(
-                            existing.join(
-                                F.broadcast(batch.select(*key_cols)),
-                                on=list(key_cols),
-                                how="left_anti",
-                            )
+
+    def attempt():
+        with cat.transaction(branch=branch) as t:
+            batch = _latest_per_key(updates, key_cols)
+            # CHECK constraints declared on the BASE table bind the
+            # logical rows this upsert introduces, even though the
+            # physical write targets the __delta side table —
+            # without this the delta was a constraint bypass whose
+            # violating rows later wedged every compaction
+            # (code-review r18)
+            t._enforce_constraints(batch, name)
+            if name not in cat._manifest_tables(t._expected_head):
+                # first write IS the initial load
+                t.overwrite(batch, name)
+            else:
+                try:
+                    existing = t.read_committed(spark, delta_table(name))
+                    # the batch wins over the stored delta for its
+                    # keys
+                    merged = batch.unionByName(
+                        existing.join(
+                            F.broadcast(batch.select(*key_cols)),
+                            on=list(key_cols),
+                            how="left_anti",
                         )
-                    except FileNotFoundError:
-                        merged = batch
-                    t.overwrite(merged, delta_table(name))
-                    # resurrect: drop the batch's keys from the dv in
-                    # the SAME atomic commit, so dv-applies-last never
-                    # hides a newer upsert (ADVICE r17)
-                    try:
-                        dv = t.read_committed(spark, dv_table(name))
-                        t.overwrite(
-                            dv.join(
-                                F.broadcast(batch.select(*key_cols)),
-                                on=list(key_cols),
-                                how="left_anti",
-                            ),
-                            dv_table(name),
-                        )
-                    except FileNotFoundError:
-                        pass
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+                    )
+                except FileNotFoundError:
+                    merged = batch
+                t.overwrite(merged, delta_table(name))
+                # resurrect: drop the batch's keys from the dv in
+                # the SAME atomic commit, so dv-applies-last never
+                # hides a newer upsert (ADVICE r17)
+                try:
+                    dv = t.read_committed(spark, dv_table(name))
+                    t.overwrite(
+                        dv.join(
+                            F.broadcast(batch.select(*key_cols)),
+                            on=list(key_cols),
+                            how="left_anti",
+                        ),
+                        dv_table(name),
+                    )
+                except FileNotFoundError:
+                    pass
+        return t.committed_manifest
+
+    return retry_on_conflict(attempt)
 
 
 def read_upserted(
@@ -193,62 +187,59 @@ def compact_full(
     ``n_files`` repartitions the rewrite (retention folds file-count
     debt in the same pass). Returns the commit's manifest id, or None
     when neither side table has rows AND no repartition was requested."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
 
-                def _side(side_name: str) -> DataFrame | None:
-                    # footer-count fast path for the emptiness test
-                    # (no Spark job; falls back to a scan — r19)
-                    try:
-                        df = t.read_committed(spark, side_name)
-                        nrows = t.committed_rows(side_name)
-                    except FileNotFoundError:
-                        return None
-                    if nrows == 0 or (nrows is None and df.isEmpty()):
-                        return None
-                    return df
+    def attempt():
+        with cat.transaction(branch=branch) as t:
 
-                delta = _side(delta_table(name))
-                dv = _side(dv_table(name))
-                if delta is None and dv is None and n_files is None:
+            def _side(side_name: str) -> DataFrame | None:
+                # footer-count fast path for the emptiness test
+                # (no Spark job; falls back to a scan — r19)
+                try:
+                    df = t.read_committed(spark, side_name)
+                    nrows = t.committed_rows(side_name)
+                except FileNotFoundError:
                     return None
-                from .positional_deletes import (
-                    guard_no_pending_positional_deletes,
-                )
+                if nrows == 0 or (nrows is None and df.isEmpty()):
+                    return None
+                return df
 
-                guard_no_pending_positional_deletes(
-                    cat, spark, name, t._expected_head
+            delta = _side(delta_table(name))
+            dv = _side(dv_table(name))
+            if delta is None and dv is None and n_files is None:
+                return None
+            from .positional_deletes import (
+                guard_no_pending_positional_deletes,
+            )
+
+            guard_no_pending_positional_deletes(
+                cat, spark, name, t._expected_head
+            )
+            merged = t.read_committed(spark, name)
+            if delta is not None:
+                merged = merged.join(
+                    F.broadcast(delta.select(*key_cols)),
+                    on=list(key_cols),
+                    how="left_anti",
+                ).unionByName(delta)
+            if dv is not None:
+                merged = merged.join(
+                    F.broadcast(dv.select(*key_cols)),
+                    on=list(key_cols),
+                    how="left_anti",
                 )
-                merged = t.read_committed(spark, name)
-                if delta is not None:
-                    merged = merged.join(
-                        F.broadcast(delta.select(*key_cols)),
-                        on=list(key_cols),
-                        how="left_anti",
-                    ).unionByName(delta)
-                if dv is not None:
-                    merged = merged.join(
-                        F.broadcast(dv.select(*key_cols)),
-                        on=list(key_cols),
-                        how="left_anti",
-                    )
-                if n_files is not None:
-                    merged = merged.repartition(max(1, n_files))
-                t.overwrite(
-                    merged, name,
-                    base_partition_cols(cat, name, t._expected_head),
-                )
-                if delta is not None:
-                    t.truncate(delta, delta_table(name))
-                if dv is not None:
-                    t.truncate(dv, dv_table(name))
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+            if n_files is not None:
+                merged = merged.repartition(max(1, n_files))
+            t.overwrite(
+                merged, name,
+                base_partition_cols(cat, name, t._expected_head),
+            )
+            if delta is not None:
+                t.truncate(delta, delta_table(name))
+            if dv is not None:
+                t.truncate(dv, dv_table(name))
+        return t.committed_manifest
+
+    return retry_on_conflict(attempt)
 
 
 def evolve_upserted_schema(
@@ -296,42 +287,39 @@ def compact_upserts(
     compaction's own manifest id, or None when there was no delta to
     fold (no commit happened — a head re-read here could attribute a
     racing writer's manifest to this no-op; code-review r17)."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                try:
-                    delta = t.read_committed(spark, delta_table(name))
-                    nrows = t.committed_rows(delta_table(name))
-                except FileNotFoundError:
-                    return None
-                if nrows == 0 or (nrows is None and delta.isEmpty()):
-                    # nothing to fold — never rewrite the base for an
-                    # already-compacted delta (r18)
-                    return None
-                from .positional_deletes import (
-                    guard_no_pending_positional_deletes,
-                )
 
-                guard_no_pending_positional_deletes(
-                    cat, spark, name, t._expected_head
+    def attempt():
+        with cat.transaction(branch=branch) as t:
+            try:
+                delta = t.read_committed(spark, delta_table(name))
+                nrows = t.committed_rows(delta_table(name))
+            except FileNotFoundError:
+                return None
+            if nrows == 0 or (nrows is None and delta.isEmpty()):
+                # nothing to fold — never rewrite the base for an
+                # already-compacted delta (r18)
+                return None
+            from .positional_deletes import (
+                guard_no_pending_positional_deletes,
+            )
+
+            guard_no_pending_positional_deletes(
+                cat, spark, name, t._expected_head
+            )
+            merged = (
+                t.read_committed(spark, name)
+                .join(
+                    F.broadcast(delta.select(*key_cols)),
+                    on=list(key_cols),
+                    how="left_anti",
                 )
-                merged = (
-                    t.read_committed(spark, name)
-                    .join(
-                        F.broadcast(delta.select(*key_cols)),
-                        on=list(key_cols),
-                        how="left_anti",
-                    )
-                    .unionByName(delta)
-                )
-                t.overwrite(
-                    merged, name,
-                    base_partition_cols(cat, name, t._expected_head),
-                )
-                t.truncate(delta, delta_table(name))
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+                .unionByName(delta)
+            )
+            t.overwrite(
+                merged, name,
+                base_partition_cols(cat, name, t._expected_head),
+            )
+            t.truncate(delta, delta_table(name))
+        return t.committed_manifest
+
+    return retry_on_conflict(attempt)

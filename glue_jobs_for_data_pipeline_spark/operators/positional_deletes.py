@@ -46,22 +46,19 @@ first-class (VERDICT r17 task #2).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.txn import (
     Catalog,
-    ConcurrentCommitError,
     _apply_schema_ops,
     _detect_partition_cols,
     _read_version_df,
     _version_dir,
+    retry_on_conflict,
 )
 
 _PDV_SUFFIX = "__pdv"
-_COMMIT_RETRIES = 16
 _FILE_COL = "_pd_file"
 _POS_COL = "_pd_pos"
 
@@ -159,31 +156,28 @@ def delete_where_positional(
     and deletes exactly the matching physical rows (duplicates
     included, one anchor each). Returns the commit's own manifest
     id. CAS-retries like deletes.delete_where."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                hits = (
-                    _scan_with_pos(cat, spark, name, t._expected_head)
-                    .filter(predicate)
-                    .select(
-                        F.col(_FILE_COL).alias("file"),
-                        F.col(_POS_COL).alias("pos"),
-                    )
+
+    def attempt():
+        with cat.transaction(branch=branch) as t:
+            hits = (
+                _scan_with_pos(cat, spark, name, t._expected_head)
+                .filter(predicate)
+                .select(
+                    F.col(_FILE_COL).alias("file"),
+                    F.col(_POS_COL).alias("pos"),
                 )
-                try:
-                    existing = t.read_committed(spark, pdv_table(name))
-                    hits = hits.unionByName(
-                        existing.select("file", "pos")
-                    ).distinct()
-                except FileNotFoundError:
-                    pass
-                t.overwrite(hits, pdv_table(name))
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+            )
+            try:
+                existing = t.read_committed(spark, pdv_table(name))
+                hits = hits.unionByName(
+                    existing.select("file", "pos")
+                ).distinct()
+            except FileNotFoundError:
+                pass
+            t.overwrite(hits, pdv_table(name))
+        return t.committed_manifest
+
+    return retry_on_conflict(attempt)
 
 
 def read_positional(
@@ -236,40 +230,37 @@ def compact_positional_deletes(
     not a no-op). A racing delete batch makes this commit lose its CAS
     and retry with the larger pdv, so nothing is silently
     resurrected."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                try:
-                    pdv = t.read_committed(spark, pdv_table(name))
-                    nrows = t.committed_rows(pdv_table(name))
-                except FileNotFoundError:
-                    return None
-                if nrows == 0 or (nrows is None and pdv.isEmpty()):
-                    return None
-                base = _scan_with_pos(cat, spark, name, t._expected_head)
-                out_cols = [
-                    c for c in base.columns
-                    if c not in (_FILE_COL, _POS_COL)
-                ]
-                merged = base.join(
-                    F.broadcast(
-                        pdv.select(
-                            F.col("file").alias(_FILE_COL),
-                            F.col("pos").alias(_POS_COL),
-                        )
-                    ),
-                    on=[_FILE_COL, _POS_COL],
-                    how="left_anti",
-                ).select(*out_cols)
-                versions = cat._manifest_tables(t._expected_head)
-                part_by = _detect_partition_cols(
-                    _version_dir(cat.table_dir(name), versions[name])
-                )
-                t.overwrite(merged, name, part_by)
-                t.truncate(pdv, pdv_table(name))
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+
+    def attempt():
+        with cat.transaction(branch=branch) as t:
+            try:
+                pdv = t.read_committed(spark, pdv_table(name))
+                nrows = t.committed_rows(pdv_table(name))
+            except FileNotFoundError:
+                return None
+            if nrows == 0 or (nrows is None and pdv.isEmpty()):
+                return None
+            base = _scan_with_pos(cat, spark, name, t._expected_head)
+            out_cols = [
+                c for c in base.columns
+                if c not in (_FILE_COL, _POS_COL)
+            ]
+            merged = base.join(
+                F.broadcast(
+                    pdv.select(
+                        F.col("file").alias(_FILE_COL),
+                        F.col("pos").alias(_POS_COL),
+                    )
+                ),
+                on=[_FILE_COL, _POS_COL],
+                how="left_anti",
+            ).select(*out_cols)
+            versions = cat._manifest_tables(t._expected_head)
+            part_by = _detect_partition_cols(
+                _version_dir(cat.table_dir(name), versions[name])
+            )
+            t.overwrite(merged, name, part_by)
+            t.truncate(pdv, pdv_table(name))
+        return t.committed_manifest
+
+    return retry_on_conflict(attempt)

@@ -50,14 +50,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import time
-
-from ..sources.txn import Catalog, ConcurrentCommitError, _version_dir
+from ..sources.txn import Catalog, _version_dir, retry_on_conflict
 from . import deletes as _deletes
 from . import mor_upsert as _mor
 from . import positional_deletes as _pdel
-
-_COMMIT_RETRIES = 16
 
 
 @dataclass(frozen=True)
@@ -133,56 +129,53 @@ def fold_ledger(
     )
 
     lname = ledger_table(name)
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                # the ledger is metadata-sized by contract (one row per
-                # micro-batch per app) — fold it driver-side with ZERO
-                # Spark jobs (direct parquet read + driver-written
-                # stage, r20; r19 had already collapsed the old three
-                # jobs to one read). A ledger past the growth guard —
-                # the very debt this fold repairs when the contract
-                # was ignored — folds through the distributed groupBy
-                # instead of materializing on the driver.
-                try:
-                    vals = t.committed_values(
-                        lname, max_rows=LEDGER_GUARD_ROWS
-                    )
-                except FileNotFoundError:
-                    return None
-                if vals is not None:
-                    folded: dict[str, int] = {}
-                    for v in vals:
-                        a, b = v["app_id"], int(v["batch_id"])
-                        folded[a] = max(folded.get(a, b), b)
-                    if len(vals) == len(folded):
-                        return None  # already one row per app
-                    t.overwrite_small(
-                        spark, sorted(folded.items()), _LEDGER_SCHEMA,
-                        lname,
-                    )
-                else:
-                    led = t.read_committed(spark, lname)
-                    napps, nrows = led.agg(
-                        F.countDistinct("app_id"), F.count(F.lit(1))
-                    ).first()
-                    if nrows == napps:
-                        return None  # already one row per app
-                    t.overwrite(
-                        led.groupBy("app_id").agg(
-                            F.max("batch_id").alias("batch_id")
-                        ),
-                        lname,
-                    )
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            # a streaming batch landed mid-fold: re-read, retry — the
-            # maintenance pass must serialize with live writers, not
-            # crash the cron job (code-review r18)
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+
+    def attempt():
+        with cat.transaction(branch=branch) as t:
+            # the ledger is metadata-sized by contract (one row per
+            # micro-batch per app) — fold it driver-side with ZERO
+            # Spark jobs (direct parquet read + driver-written
+            # stage, r20; r19 had already collapsed the old three
+            # jobs to one read). A ledger past the growth guard —
+            # the very debt this fold repairs when the contract
+            # was ignored — folds through the distributed groupBy
+            # instead of materializing on the driver.
+            try:
+                vals = t.committed_values(
+                    lname, max_rows=LEDGER_GUARD_ROWS
+                )
+            except FileNotFoundError:
+                return None
+            if vals is not None:
+                folded: dict[str, int] = {}
+                for v in vals:
+                    a, b = v["app_id"], int(v["batch_id"])
+                    folded[a] = max(folded.get(a, b), b)
+                if len(vals) == len(folded):
+                    return None  # already one row per app
+                t.overwrite_small(
+                    spark, sorted(folded.items()), _LEDGER_SCHEMA,
+                    lname,
+                )
+            else:
+                led = t.read_committed(spark, lname)
+                napps, nrows = led.agg(
+                    F.countDistinct("app_id"), F.count(F.lit(1))
+                ).first()
+                if nrows == napps:
+                    return None  # already one row per app
+                t.overwrite(
+                    led.groupBy("app_id").agg(
+                        F.max("batch_id").alias("batch_id")
+                    ),
+                    lname,
+                )
+        return t.committed_manifest
+
+    # a streaming batch landing mid-fold makes the commit lose its CAS:
+    # re-read and retry — the maintenance pass must serialize with live
+    # writers, not crash the cron job (code-review r18)
+    return retry_on_conflict(attempt)
 
 
 def enforce_retention(
@@ -295,58 +288,42 @@ def enforce_retention(
         # the cron job (ADVICE r18).
         _PDV_RACE_RETRIES = 4
         if key_cols:
-            ran = False
-            for pdv_attempt in range(_PDV_RACE_RETRIES):
-                try:
-                    ran = (
-                        _mor.compact_full(
-                            cat, spark, name, key_cols, branch,
-                            n_files=n_files,
-                        )
-                        is not None
+
+            def rewrite() -> bool:
+                return (
+                    _mor.compact_full(
+                        cat, spark, name, key_cols, branch, n_files=n_files
                     )
-                    break
-                except ValueError as exc:
-                    if "pending positional deletes" not in str(exc) or (
-                        pdv_attempt == _PDV_RACE_RETRIES - 1
-                    ):
-                        raise
-                    if (
-                        _pdel.compact_positional_deletes(
-                            cat, spark, name, branch
-                        )
-                        is not None
-                    ):
-                        actions["fold_positional_deletes"] = True
+                    is not None
+                )
+
         else:  # files_due only, keyless table: plain sized rewrite
-            last: Exception | None = None
-            ran = False
-            for attempt in range(_COMMIT_RETRIES):
-                try:
-                    cat.compact_table(
+
+            def rewrite() -> bool:
+                retry_on_conflict(
+                    lambda: cat.compact_table(
                         spark,
                         name,
                         target_file_bytes=policy.target_file_bytes,
                         branch=branch,
                     )
-                    ran = True
-                    break
-                except ConcurrentCommitError as exc:
-                    last = exc
-                    time.sleep(0.02 * (attempt + 1))
-                except ValueError as exc:
-                    if "pending positional deletes" not in str(exc):
-                        raise
-                    last = exc
-                    if (
-                        _pdel.compact_positional_deletes(
-                            cat, spark, name, branch
-                        )
-                        is not None
-                    ):
-                        actions["fold_positional_deletes"] = True
-            if not ran:
-                raise last  # type: ignore[misc]
+                )
+                return True
+
+        for pdv_attempt in range(_PDV_RACE_RETRIES):
+            try:
+                ran = rewrite()
+                break
+            except ValueError as exc:
+                if "pending positional deletes" not in str(exc) or (
+                    pdv_attempt == _PDV_RACE_RETRIES - 1
+                ):
+                    raise
+                if (
+                    _pdel.compact_positional_deletes(cat, spark, name, branch)
+                    is not None
+                ):
+                    actions["fold_positional_deletes"] = True
         actions["fold_upsert_delta"] = delta_due and ran
         actions["fold_deletion_vector"] = dv_due and ran
         actions["compact_base_files"] = files_due and ran

@@ -2796,17 +2796,18 @@ def x_ingest_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same synthetic feed. The batch analog of streaming
     dropDuplicatesWithinWatermark, with exact unbounded state."""
     from ..operators.incremental import dedup_ingest
+    from ..sources.txn import Catalog
 
-    store = _scratch_dir("spark_graft_dedupstore_")
+    store = Catalog(_scratch_dir("spark_graft_dedupstore_"))
     docs = load_table(spark, sf_dir, "documents")
     b1 = docs.select("doc_id", "text")
     b2 = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
     fp = tx.content_fingerprint(F.col("text"))
-    adm1 = dedup_ingest(spark, store, b1, "doc_id", fp)
+    adm1 = dedup_ingest(spark, store, "fp_store", b1, "doc_id", fp)
     adm1 = adm1.localCheckpoint(eager=True)  # pin before store advances
-    adm2 = dedup_ingest(spark, store, b2, "doc_id", fp)
+    adm2 = dedup_ingest(spark, store, "fp_store", b2, "doc_id", fp)
     return adm1.unionByName(adm2)
 
 
@@ -3492,19 +3493,20 @@ def x_stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SCD-2 ingestion end-to-end: the m1b delta fixture's two
     source batches arrive as files on a streaming source; each
     trigger(availableNow) drain applies one micro-batch through the
-    scd2_upsert kernel and commits a txn version (effectively-once via
-    the in-version batch id). The final committed dim state equals the
+    scd2_upsert kernel and commits the dim version with its ledger row
+    in one catalog manifest (exactly-once). The final committed dim
+    state equals the
     batch delta upsert over the same data — the oracle is m1b's SQL,
     verbatim. Per-invocation scratch via _scratch_dir: concurrent runs
     against the same sf_dir cannot race, and the copy is reclaimed at
     interpreter exit."""
-    from ..sources import txn
+    from ..sources.txn import Catalog
     from ..streaming.events import scd2_stream_apply
     from . import tpch_fixtures as fx
 
     root = _scratch_dir("spark_graft_scd2stream_")
     src_dir = f"{root}/src"
-    dim_dir = f"{root}/dim_customers"
+    cat = Catalog(f"{root}/wh")
     ckpt = f"{root}/ckpt"
 
     src = fx.ref_customers(spark, sf_dir)
@@ -3521,8 +3523,8 @@ def x_stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     def drain(run_date) -> None:
         scd2_stream_apply(
             spark.readStream.schema(schema).format("parquet").load(src_dir),
-            dim_dir, "CustomerID", tuple(cols), "CustomerKey", ckpt,
-            run_date=run_date, mode="delta",
+            cat, "dim_customers", "CustomerID", tuple(cols), "CustomerKey",
+            ckpt, run_date=run_date, mode="delta",
         )
 
     # batch 1 lands -> initial load; batch 2 lands -> delta re-version.
@@ -3532,7 +3534,7 @@ def x_stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain(fx.INITIAL_LOAD_DATE)
     batch.coalesce(1).write.mode("append").parquet(src_dir)
     drain(fx.SECOND_BATCH_DATE)
-    return txn.read_committed(spark, dim_dir)
+    return cat.read(spark, "dim_customers")
 
 
 _X_STREAM_XO_SQL = """
@@ -4946,19 +4948,22 @@ FROM orders GROUP BY o_orderstatus, o_orderpriority
 def x_ingest_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance: the orders fact arrives as two
     batches; each refresh merges the batch's PARTIAL aggregates into the
-    stored rollup through an atomic txn commit (operators/incremental.py)
+    stored rollup through an atomic catalog commit (operators/incremental.py)
     — history is never re-scanned. The oracle is the equivalence proof:
     merge(partial(b1), partial(b2)) == full GROUP BY over everything."""
     from ..operators.incremental import refresh_rollup
+    from ..sources.txn import Catalog
 
     # per-invocation scratch, atexit-reclaimed (see _scratch_dir)
-    rollup_dir = _scratch_dir("spark_graft_rollup_")
+    cat = Catalog(_scratch_dir("spark_graft_rollup_"))
     o = load_table(spark, sf_dir, "orders")
     keys = ["o_orderstatus", "o_orderpriority"]
     sums = {"o_totalprice": "sum_price"}
-    refresh_rollup(spark, rollup_dir, o.filter(F.col("o_orderkey") % 2 == 0), keys, sums)
+    refresh_rollup(
+        spark, cat, "rollup", o.filter(F.col("o_orderkey") % 2 == 0), keys, sums
+    )
     final = refresh_rollup(
-        spark, rollup_dir, o.filter(F.col("o_orderkey") % 2 == 1), keys, sums
+        spark, cat, "rollup", o.filter(F.col("o_orderkey") % 2 == 1), keys, sums
     )
     return final.select(
         *keys,
@@ -5155,22 +5160,25 @@ FROM orders GROUP BY o_orderstatus
 @_q("x_storage_time_travel", _X_TIME_TRAVEL_SQL)
 def x_storage_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot time travel over the versioned-commit store: two
-    overwrites leave two immutable versions; read_version(1) still sees
-    the first snapshot after version 2 commits (the Delta/Iceberg
-    `VERSION AS OF` semantics on the pointer-swap core). The oracle
+    overwrites commit two manifests; read_asof(first) still sees the
+    first snapshot after the second commits (the Delta/Iceberg
+    `VERSION AS OF` semantics on the catalog core). The oracle
     recomputes both snapshots from the source."""
-    from ..sources import txn
+    from ..sources.txn import Catalog
 
     # per-invocation scratch, atexit-reclaimed (see _scratch_dir)
-    d = _scratch_dir("spark_graft_ttravel_")
+    cat = Catalog(_scratch_dir("spark_graft_ttravel_"))
     o = load_table(spark, sf_dir, "orders")
     agg = lambda df: df.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))  # noqa: E731
-    txn.txn_overwrite(agg(o.filter(F.col("o_orderkey") % 2 == 0)), d)
-    txn.txn_overwrite(agg(o), d)
-    v1 = txn.read_version(spark, d, 1).select(
+    with cat.transaction() as t:
+        t.overwrite(agg(o.filter(F.col("o_orderkey") % 2 == 0)), "agg")
+    first = t.committed_manifest
+    with cat.transaction() as t:
+        t.overwrite(agg(o), "agg")
+    v1 = cat.read_asof(spark, "agg", first).select(
         F.lit(1).alias("version"), "o_orderstatus", "n"
     )
-    v2 = txn.read_committed(spark, d).select(
+    v2 = cat.read(spark, "agg").select(
         F.lit(2).alias("version"), "o_orderstatus", "n"
     )
     return v1.unionByName(v2)
@@ -5311,8 +5319,9 @@ def x_ingest_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a reader never sees a batch in A whose contributions are missing
     from J."""
     from ..operators.incremental import refresh_join
+    from ..sources.txn import Catalog
 
-    store = _scratch_dir("ivm_join_")
+    store = Catalog(_scratch_dir("ivm_join_"))
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -5324,6 +5333,7 @@ def x_ingest_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh_join(
         spark,
         store,
+        "j",
         o.filter(F.col("o_orderkey") % 2 == 0),
         c.filter(F.col("c_custkey") % 2 == 0),
         "_k",
@@ -5331,6 +5341,7 @@ def x_ingest_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = refresh_join(
         spark,
         store,
+        "j",
         o.filter(F.col("o_orderkey") % 2 == 1),
         c.filter(F.col("c_custkey") % 2 == 1),
         "_k",

@@ -2,34 +2,25 @@
 reference's transaction bracket (dynamic_upsert.py:108,151 BEGIN/COMMIT,
 159-161 ROLLBACK on failure) re-expressed for immutable file storage —
 the container has no Delta/Iceberg, and at 100 TB the protocol below is
-exactly the snapshot/pointer core those formats implement.
+exactly the snapshot/manifest core those formats implement.
 
-Layout per table directory:
+There is ONE commit path, in three tiers:
 
-    <dir>/v=<N>/part-*.parquet   immutable version directories
-    <dir>/_CURRENT               pointer file holding N
-
-Write path: land the FULL new version under ``v=<next>`` (the expensive,
-distributed part — can fail freely), then publish it by atomically
-replacing the pointer file (``os.replace``, a single metadata op).
-Readers resolve ``_CURRENT`` first and scan only that version directory,
-so they never observe a partially-written table; a crash anywhere before
-the pointer swap leaves the committed view untouched (rollback = do
-nothing, plus optional garbage collection of orphaned versions).
-
-``Transaction`` extends this to multi-table pipelines: stage every
-table's new version while the transaction is open, swap ALL pointers
-only after every write has finished. An exception mid-pipeline rolls
-back by deleting the staged (never-published) versions. The vulnerable
-window shrinks from "any time during any write" to "between the first
-and last pointer swap" — pure metadata ops.
-
-``Catalog`` / ``CatalogTransaction`` close even that window: tables
-commit through ONE manifest file and ONE ``_HEAD`` pointer swap, so a
-multi-table commit is a single atomic metadata op and readers can never
-observe a new dim with an old fact (the reference's cross-statement
-BEGIN/COMMIT, dynamic_upsert.py:108,151 — now matched, not
-approximated; crash-injection proof in tests/test_txn.py).
+1. Staging. Every write lands a FULL new table version under
+   ``<root>/<table>/v=<N>/`` (the expensive, distributed part — it can
+   fail freely). A staged version is invisible: nothing names it yet.
+2. Commit. ``Catalog`` / ``CatalogTransaction`` publish every table
+   staged in a bracket through ONE manifest file and ONE ``_HEAD``
+   swap (``os.replace``, a single metadata op), CAS-guarded against the
+   head the bracket opened at. Readers resolve ``_HEAD`` first, so a
+   multi-table commit flips every table together, and a crash anywhere
+   before the swap leaves the previous state fully committed (rollback
+   = delete the staged dirs; crash-injection proof in
+   tests/test_txn.py).
+3. Conflict. A bracket whose head moved raises
+   ``ConcurrentCommitError``; ``retry_on_conflict`` is the one bounded
+   re-read-and-retry loop every read-modify-write operator runs its
+   bracket through.
 """
 
 from __future__ import annotations
@@ -42,8 +33,6 @@ import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-
-_POINTER = "_CURRENT"
 
 # lossless type-widening lattice for the "widen" schema op (r18):
 # source simpleString -> simpleStrings it may widen to. DECIMAL
@@ -177,19 +166,6 @@ def _validate_schema_ops(ops: list[dict]) -> None:
             raise ValueError(f"unknown schema op kind: {op!r}")
 
 
-def _pointer_path(table_dir: str) -> str:
-    return os.path.join(table_dir, _POINTER)
-
-
-def current_version(table_dir: str) -> int | None:
-    """Committed version of a table, or None if never committed."""
-    try:
-        with open(_pointer_path(table_dir)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
-
-
 def _version_dir(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, f"v={version}")
 
@@ -198,7 +174,6 @@ def _next_version(table_dir: str) -> int:
     """Next unused version number (scans v=* dirs AND v=*.claim
     reservation markers, so neither an orphaned staging directory nor a
     concurrent writer's just-reserved number is ever reused)."""
-    cur = current_version(table_dir) or 0
     existing = []
     if os.path.isdir(table_dir):
         for d in os.listdir(table_dir):
@@ -209,7 +184,7 @@ def _next_version(table_dir: str) -> int:
                 tail = tail[: -len(".claim")]
             if tail.isdigit():
                 existing.append(int(tail))
-    return max([cur, *existing], default=0) + 1
+    return max(existing, default=0) + 1
 
 
 def _reserve_version(table_dir: str) -> int:
@@ -232,25 +207,14 @@ def _reserve_version(table_dir: str) -> int:
         return version
 
 
-def _publish(table_dir: str, version: int) -> None:
-    """Atomically point _CURRENT at ``version`` (write-temp + os.replace,
-    which POSIX guarantees atomic on one filesystem)."""
-    tmp = _pointer_path(table_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _pointer_path(table_dir))
-
-
 def stage_version(
     df: DataFrame, table_dir: str, partition_by: tuple[str, ...] = ()
 ) -> int:
     """Write a full new version WITHOUT publishing it. Returns the staged
-    version number (pass to publish_version / discard_version).
+    version number; only a Catalog manifest commit publishes it.
 
     The DataFrame's schema is recorded alongside the data
-    (``_SCHEMA.json``) so later readers — compact() especially — can
+    (``_SCHEMA.json``) so later readers — compaction especially — can
     reapply the EXACT column types instead of re-inferring partition
     column types from ``col=value`` directory names (inference would
     silently turn a string partition value like '0042' into int 42).
@@ -565,66 +529,6 @@ def _read_version_df(spark: SparkSession, vdir: str) -> DataFrame:
     return spark.read.parquet(vdir)
 
 
-def publish_version(table_dir: str, version: int) -> None:
-    _publish(table_dir, version)
-
-
-def discard_version(table_dir: str, version: int) -> None:
-    """Rollback helper: delete a staged (unpublished) version. Refuses to
-    delete the committed version."""
-    if current_version(table_dir) == version:
-        raise ValueError(f"version {version} is committed; vacuum instead")
-    shutil.rmtree(_version_dir(table_dir, version), ignore_errors=True)
-
-
-def txn_overwrite(
-    df: DataFrame, table_dir: str, partition_by: tuple[str, ...] = ()
-) -> int:
-    """Single-table transactional overwrite: stage + publish. The
-    pointer swap is the commit point; everything before it is abortable.
-    """
-    version = stage_version(df, table_dir, partition_by)
-    _publish(table_dir, version)
-    return version
-
-
-def read_version(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
-    """Scan one specific version directory — e.g. a just-staged version a
-    later pipeline step builds on before the transaction publishes."""
-    return _read_version_df(spark, _version_dir(table_dir, version))
-
-
-def read_committed(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Scan the committed version only (never staged/partial data)."""
-    version = current_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    return _read_version_df(spark, _version_dir(table_dir, version))
-
-
-def vacuum(table_dir: str, keep: int = 2) -> list[int]:
-    """Remove old version directories, retaining the committed version
-    and up to ``keep - 1`` predecessors (time travel window). Returns the
-    versions removed. Never touches versions NEWER than the pointer
-    (they may be another writer's in-flight staging)."""
-    cur = current_version(table_dir)
-    if cur is None:
-        return []
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
-    keep_set = set(v for v in versions if v <= cur)
-    keep_set = set(sorted(keep_set)[-keep:]) | {v for v in versions if v > cur}
-    removed = []
-    for v in versions:
-        if v not in keep_set:
-            shutil.rmtree(_version_dir(table_dir, v), ignore_errors=True)
-            removed.append(v)
-    return removed
-
-
 def _detect_partition_cols(vdir: str) -> tuple[str, ...]:
     """Partition columns of a version directory, inferred from its
     ``col=value`` subdirectory chain (the on-disk encoding Spark writes
@@ -642,75 +546,6 @@ def _detect_partition_cols(vdir: str) -> tuple[str, ...]:
         cols.append(subs[0].split("=", 1)[0])
         cur = os.path.join(cur, subs[0])
     return tuple(cols)
-
-
-def compact(
-    spark: SparkSession,
-    table_dir: str,
-    target_file_bytes: int = 128 << 20,
-    partition_by: tuple[str, ...] | None = None,
-) -> int:
-    """Rewrite the committed version into ~target-sized files and publish
-    the result as a new version (atomic via the pointer swap — readers
-    see either the fragmented or the compacted table, never a mix).
-
-    Incremental appends leave a long tail of small files; at scale the
-    scan cost becomes task-scheduling overhead and footer reads, not
-    bytes. Compaction sizes the output by the CURRENT on-disk bytes
-    (ceil(bytes/target) files), so it needs no sampling pass. Returns
-    the new committed version. Run vacuum() afterwards to reclaim the
-    fragmented version once readers drain.
-
-    A partitioned table (written with ``partition_by``) keeps its layout:
-    partition columns are auto-detected from the ``col=value`` directory
-    chain when ``partition_by`` is None, and the rewrite shuffles on
-    those columns before ``partitionBy`` so pruning survives compaction.
-    Pass ``partition_by=()`` to deliberately flatten the layout.
-    """
-    import math
-
-    version = current_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    vdir = _version_dir(table_dir, version)
-    if partition_by is None:
-        partition_by = _detect_partition_cols(vdir)
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(vdir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = _read_version_df(spark, vdir)
-    if partition_by:
-        # Shuffle on the partition columns so each output task holds few
-        # distinct partition keys -> ~one file per (task, key) instead of
-        # every task writing into every partition directory.
-        compacted = df.repartition(n_files, *partition_by)
-    else:
-        compacted = df.repartition(n_files)
-    return txn_overwrite(compacted, table_dir, partition_by or ())
-
-
-def gc_orphans(table_dir: str) -> list[int]:
-    """Delete version directories NEWER than the committed pointer —
-    debris from writers that crashed after staging but before publishing.
-    Only call when no writer is in flight (orphans are indistinguishable
-    from another writer's active staging directory without a lock
-    service; on a real deployment the catalog's commit protocol owns
-    this). Returns the versions removed."""
-    cur = current_version(table_dir)
-    if cur is None or not os.path.isdir(table_dir):
-        return []
-    removed = []
-    for d in os.listdir(table_dir):
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit():
-            v = int(d.split("=", 1)[1])
-            if v > cur:
-                shutil.rmtree(_version_dir(table_dir, v), ignore_errors=True)
-                removed.append(v)
-    return sorted(removed)
 
 
 _MANIFEST_DIR = "_MANIFEST"
@@ -742,7 +577,30 @@ class ConcurrentCommitError(RuntimeError):
     merging our staged tables over the CURRENT manifest could silently
     drop the racing writer's tables (lost update). The loser re-reads,
     restages on top of the new head, and retries — the same contract as
-    an Iceberg/Delta conditional-put conflict."""
+    an Iceberg/Delta conditional-put conflict (see retry_on_conflict)."""
+
+
+# CAS-retry budget: under N-way same-table contention the last writer
+# needs ~N attempts, and a commit-lock collision (not just a moved
+# ref) also costs one — size generously, back off linearly
+_COMMIT_RETRIES = 16
+
+
+def retry_on_conflict(attempt_fn):
+    """Run ``attempt_fn()`` until it returns without a
+    ConcurrentCommitError, and return its result. ``attempt_fn`` must
+    open its own ``cat.transaction()`` and read through it, so every
+    retry re-reads a fresh snapshot. Only a lost CAS race retries (at
+    most ``_COMMIT_RETRIES`` attempts, linear back-off); the last
+    conflict re-raises, and any other exception propagates at once."""
+    last: ConcurrentCommitError | None = None
+    for attempt in range(_COMMIT_RETRIES):
+        try:
+            return attempt_fn()
+        except ConcurrentCommitError as exc:
+            last = exc
+            time.sleep(0.02 * (attempt + 1))
+    raise last  # type: ignore[misc]
 
 
 class MergeConflictError(ValueError):
@@ -805,12 +663,10 @@ class Catalog:
     A transaction stages every table's new version, writes ONE new
     manifest holding the full updated table->version mapping, then
     swaps _HEAD with a single ``os.replace`` — so readers resolving
-    through the catalog observe every table flip TOGETHER. This closes
-    the window ``Transaction`` documents ("between the first and last
-    pointer swap"): a crash anywhere before the HEAD swap leaves the
-    previous manifest — and therefore every table's previous version —
-    fully committed; a crash after leaves the new state fully
-    committed. There is no instant at which a reader can see the new
+    through the catalog observe every table flip TOGETHER: a crash
+    anywhere before the HEAD swap leaves the previous manifest — and
+    therefore every table's previous version — fully committed; a
+    crash after leaves the new state fully committed. There is no instant at which a reader can see the new
     dim with the old fact (crash-injection proof in
     tests/test_txn.py). Mirrors the reference's cross-statement
     BEGIN/COMMIT spanning dim + fact (dynamic_upsert.py:108,151;
@@ -1045,7 +901,7 @@ class Catalog:
         return src
 
     def delete_branch(self, name: str) -> None:
-        """Drop a ref (never ``main``). Data stays until gc/vacuum —
+        """Drop a ref (never ``main``). Data stays until gc/expiry —
         deleting a branch only unpins its manifests.
 
         Runs under the commit lock (ADVICE r15): an unlocked unlink
@@ -1825,7 +1681,8 @@ class Catalog:
     ) -> int:
         """Rewrite one table into ~target-sized files and commit the
         result as a new manifest (same sizing/partition-detection rules
-        as compact(); atomic via the HEAD swap). Branch-aware since r18
+        ceil(bytes/target) files, partition columns auto-detected from
+        the ``col=value`` chain; atomic via the HEAD swap). Branch-aware since r18
         (code-review: the main-only version compacted the wrong
         branch's table when called from branch maintenance). Refuses
         while positional deletes are pending — the rewrite would
@@ -2125,9 +1982,9 @@ class CatalogTransaction:
 
     An exception inside the block deletes every staged version; the
     committed manifest — and every table it references — is untouched.
-    Unlike Transaction there is no partial-commit window to retry out
-    of: either the HEAD swap happened (everything published) or it
-    didn't (nothing published).
+    There is no partial-commit window to retry out of: either the HEAD
+    swap happened (everything published) or it didn't (nothing
+    published).
     """
 
     def __init__(self, catalog: Catalog, branch: str = "main") -> None:
@@ -2322,7 +2179,10 @@ class CatalogTransaction:
         )
         # replacing our own earlier stage: drop the superseded dir
         if name in self._staged and self._staged[name] != version:
-            discard_version(self._catalog.table_dir(name), self._staged[name])
+            shutil.rmtree(
+                _version_dir(self._catalog.table_dir(name), self._staged[name]),
+                ignore_errors=True,
+            )
         self._staged[name] = version
         # appended files keep the base's (possibly pre-evolution)
         # schema — the commit must NOT reset this table's op list.
@@ -2391,69 +2251,4 @@ class CatalogTransaction:
                     ignore_errors=True,
                 )
             self._staged = {}
-        return False  # propagate the exception after rollback
-
-
-class Transaction:
-    """Multi-table write-last bracket.
-
-    >>> with Transaction() as txn:
-    ...     txn.overwrite(dim_df, dim_dir)
-    ...     txn.overwrite(fact_df, fact_dir, partition_by=("OrderDateKey",))
-    ... # all pointers swapped here, only after every write landed
-
-    An exception inside the block deletes every staged version and
-    republishes nothing — the committed view of every table is exactly
-    what it was before the block (the reference's ROLLBACK,
-    dynamic_upsert.py:159-161).
-    """
-
-    def __init__(self) -> None:
-        self._staged: list[tuple[str, int]] = []
-
-    def overwrite(
-        self, df: DataFrame, table_dir: str, partition_by: tuple[str, ...] = ()
-    ) -> int:
-        version = stage_version(df, table_dir, partition_by)
-        self._staged.append((table_dir, version))
-        return version
-
-    def __enter__(self) -> "Transaction":
-        return self
-
-    @property
-    def staged(self) -> list[tuple[str, int]]:
-        """Staged-but-unpublished (table_dir, version) pairs. Non-empty
-        after a partial commit failure: the caller can retry the
-        remaining publishes (``publish_staged()``) or roll them back
-        (``discard_staged()``)."""
-        return list(self._staged)
-
-    def publish_staged(self) -> None:
-        """Retry path after a partial commit failure: publish whatever
-        is still staged, front to back."""
-        while self._staged:
-            table_dir, version = self._staged[0]
-            _publish(table_dir, version)
-            self._staged.pop(0)
-
-    def discard_staged(self) -> None:
-        """Cleanup path after a partial commit failure: delete the
-        staged versions that never published. Already-published tables
-        stay published (a cross-table un-publish would itself be a
-        non-atomic multi-pointer operation)."""
-        for table_dir, version in self._staged:
-            discard_version(table_dir, version)
-        self._staged.clear()
-
-    def __exit__(self, exc_type, exc, tb) -> bool:
-        if exc_type is None:
-            # Publish front-to-back, consuming the staged list as each
-            # pointer lands: if a publish raises partway, self._staged
-            # still holds exactly the unpublished remainder, so the
-            # caller can publish_staged() (retry) or discard_staged()
-            # instead of losing the handles to a half-committed state.
-            self.publish_staged()
-        else:
-            self.discard_staged()
         return False  # propagate the exception after rollback

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.readers import load_events, normalize_event_ts, scratch_dir
+from ..sources.txn import Catalog
 
 # symlink-dir per sf_dir, reused within a process (read_events_stream)
 _STREAM_DIR_CACHE: dict[str, str] = {}
@@ -338,7 +339,8 @@ def enrich_stream_static(
 
 def scd2_stream_apply(
     source_stream: DataFrame,
-    dim_dir: str,
+    cat: Catalog,
+    name: str,
     business_key: str,
     columns: tuple[str, ...],
     surrogate_key: str,
@@ -348,72 +350,50 @@ def scd2_stream_apply(
     order_col: str | None = None,
 ) -> None:
     """Streaming SCD-2 ingestion: apply each micro-batch of source rows
-    to a versioned dimension table via foreachBatch.
+    to the versioned dimension stored as catalog table ``name`` via
+    foreachBatch.
 
     Per batch: collapse the batch to ONE row per business key (a drained
     backlog can deliver several versions of a key in one availableNow
     batch — ``order_col`` picks the latest for CDC streams with an
     ordering column; without one, the lexicographically greatest
-    attribute tuple wins, deterministic either way), read the committed
-    dim snapshot, run the same scd2_upsert kernel the batch pipeline
-    uses (delta mode by default — only changed rows re-version), and
-    publish atomically through the txn pointer swap.
+    attribute tuple wins, deterministic either way), read the dim at
+    the transaction's snapshot, run the same scd2_upsert kernel the
+    batch pipeline uses (delta mode by default — only changed rows
+    re-version), and stage the new dim version.
 
-    Effectively-once: the batch id is recorded INSIDE the staged version
-    (``_BATCH`` file) before the pointer swap, so both commit together.
-    foreachBatch alone is at-least-once — a crash between the pointer
-    swap and the streaming checkpoint commit replays the batch — but the
-    replay sees its own batch id already committed and becomes a no-op,
-    so dim history never double-applies. Dim versions accumulate one
-    per non-empty batch; vacuum() bounds history.
+    Exactly-once: the commit rides streaming/exactly_once's sink, so
+    the new dim version and the batch's ledger row (``name__commits``,
+    app id ``scd2``) publish in ONE manifest swap on ``main``. A replayed
+    batch (crash between the commit and the streaming checkpoint) sees
+    its id already committed and is a no-op, so dim history never
+    double-applies. Dim versions accumulate one per non-empty batch;
+    ``Catalog.expire_snapshots`` bounds history.
 
     Runs with trigger(availableNow) and BLOCKS until the source drains
     (the semantics a scheduled incremental ingest wants). For a
     continuous deployment swap the trigger; nothing else changes.
     """
-    import os
-
     from ..operators.scd2 import scd2_upsert
-    from ..sources.txn import (
-        _version_dir,
-        current_version,
-        publish_version,
-        read_committed,
-        stage_version,
+    from .exactly_once import _exactly_once_sink, ledger_table
+
+    order_by = (
+        [F.col(order_col).desc()]
+        if order_col
+        else [F.col(c).desc() for c in columns if c != business_key]
     )
+    w = Window.partitionBy(business_key).orderBy(*order_by)
 
-    def _committed_batch_id() -> int | None:
-        v = current_version(dim_dir)
-        if v is None:
-            return None
-        try:
-            with open(os.path.join(_version_dir(dim_dir, v), "_BATCH")) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if _committed_batch_id() == batch_id:
-            return  # replay of an already-committed batch: no-op
-        spark = batch_df.sparkSession
-        order_by = (
-            [F.col(order_col).desc()]
-            if order_col
-            else [F.col(c).desc() for c in columns if c != business_key]
-        )
-        w = Window.partitionBy(business_key).orderBy(*order_by)
+    def stage(t, spark: SparkSession, batch_df: DataFrame) -> None:
         latest = (
             batch_df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        dim = (
-            read_committed(spark, dim_dir)
-            if current_version(dim_dir) is not None
-            else None
-        )
+        try:
+            dim = t.read_committed(spark, name)
+        except FileNotFoundError:
+            dim = None
         new_dim = scd2_upsert(
             dim,
             latest,
@@ -423,13 +403,12 @@ def scd2_stream_apply(
             run_date=run_date,
             mode=mode,
         )
-        v = stage_version(new_dim, dim_dir)
-        with open(os.path.join(_version_dir(dim_dir, v), "_BATCH"), "w") as f:
-            f.write(str(batch_id))
-        publish_version(dim_dir, v)
+        t.overwrite(new_dim, name)
 
     q = (
-        source_stream.writeStream.foreachBatch(apply_batch)
+        source_stream.writeStream.foreachBatch(
+            _exactly_once_sink(cat, ledger_table(name), "scd2", "main", stage)
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -2,9 +2,8 @@
 
 ``foreachBatch`` is at-least-once: a crash between the sink's side
 effect and the streaming checkpoint commit replays the micro-batch on
-restart. ``scd2_stream_apply`` (events.py) closes that for ONE
-pointer-swap table; this module closes it for the CATALOG — the
-streaming analog of the reference's batch transaction bracket
+restart. This module closes that for the CATALOG — the streaming
+analog of the reference's batch transaction bracket
 (dynamic_upsert.py:108,151 BEGIN/COMMIT): each micro-batch lands as ONE
 atomic manifest commit that covers BOTH the appended data and a
 recorded batch id, so a replayed batch observes its own id already
@@ -28,15 +27,13 @@ stream (zombie executor after failover) cannot double-append.
 
 from __future__ import annotations
 
-import time
 import warnings
 
 from pyspark.sql import DataFrame
 
-from ..sources.txn import Catalog, ConcurrentCommitError
+from ..sources.txn import Catalog, retry_on_conflict
 
 _LEDGER_SUFFIX = "__commits"
-_COMMIT_RETRIES = 16
 _LEDGER_SCHEMA = "app_id string, batch_id long"
 # Growth guard (r20; VERDICT r19 #6): the ledger is metadata-sized BY
 # CONTRACT (one row per micro-batch per app, folded to one per app by
@@ -117,104 +114,89 @@ def _exactly_once_sink(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         empty: bool | None = None  # evaluated lazily, once
-        last: ConcurrentCommitError | None = None
-        for attempt in range(_COMMIT_RETRIES):
-            try:
-                with cat.transaction(branch=branch) as t:
-                    # The ledger is metadata-sized BY CONTRACT (one row
-                    # per micro-batch per app, folded to one per app by
-                    # retention — module docstring), so it reads AND
-                    # writes back on the driver: the replay test runs
-                    # in Python over a direct parquet read, and the
-                    # updated ledger stages as a driver-written file —
-                    # ZERO Spark jobs on the ledger path (r20; r19 had
-                    # already collapsed it to one). Per micro-batch
-                    # that removes ~0.3 s (collect) + ~0.5 s (staged
-                    # write job) of fixed cost on the commit-dominated
-                    # stream queries (guide §1.2/§5: driver does
-                    # metadata work, executors data work — Delta's
-                    # _delta_log entries are equally driver-written).
-                    # Past LEDGER_GUARD_ROWS the contract is broken:
-                    # fall back to the distributed replay test + a
-                    # 1-row append (content-identical) and warn.
-                    big = False
-                    rows: list[tuple[str, int]] | None
-                    try:
-                        nrows = t.committed_rows(ledger_name)
-                        if nrows is not None and nrows > LEDGER_GUARD_ROWS:
-                            big = True
-                            rows = None
-                        else:
-                            rows = t.committed_values(
-                                ledger_name, max_rows=LEDGER_GUARD_ROWS
-                            )
-                            if rows is not None:
-                                rows = [
-                                    (v["app_id"], int(v["batch_id"]))
-                                    for v in rows
-                                ]
-                            else:
-                                # footers couldn't answer: Spark read,
-                                # still driver-rewritten (the r19 path)
-                                rows = [
-                                    (r["app_id"], int(r["batch_id"]))
-                                    for r in t.read_committed(
-                                        spark, ledger_name
-                                    ).collect()
-                                ]
-                    except FileNotFoundError:
-                        rows = []
-                    # replay test is MAX-based (r18): batch ids are
-                    # strictly increasing per checkpoint and committed
-                    # in order, so <= max means already committed —
-                    # and the test stays complete after a retention
-                    # fold keeps only the per-app max row. It runs
-                    # BEFORE the emptiness probe (r20): a replayed
-                    # batch then publishes nothing without paying any
-                    # Spark job at all.
-                    if big:
-                        led = t.read_committed(spark, ledger_name)
-                        row = led.filter(led["app_id"] == app_id).agg(
-                            {"batch_id": "max"}
-                        ).first()
-                        latest = None if row[0] is None else int(row[0])
-                    else:
-                        mine = [b for a, b in rows if a == app_id]
-                        latest = max(mine) if mine else None
-                    if latest is not None and batch_id <= latest:
-                        return  # replayed batch: the bracket exits
-                        # empty and publishes nothing
-                    if empty is None:
-                        empty = batch_df.isEmpty()
-                    if empty:
-                        return  # an empty fresh batch is equally a no-op
-                    stage(t, spark, batch_df)
-                    if big:
-                        warnings.warn(
-                            f"exactly-once ledger {ledger_name!r} exceeds "
-                            f"{LEDGER_GUARD_ROWS} rows — the retention "
-                            "fold (operators/retention.py fold_ledger) "
-                            "is overdue; committing via the distributed "
-                            "path",
-                            RuntimeWarning,
-                            stacklevel=2,
+
+        def attempt() -> None:
+            nonlocal empty
+            with cat.transaction(branch=branch) as t:
+                # The ledger is metadata-sized BY CONTRACT (one row
+                # per micro-batch per app, folded to one per app by
+                # retention — module docstring), so it reads AND
+                # writes back on the driver: the replay test runs
+                # in Python over a direct parquet read, and the
+                # updated ledger stages as a driver-written file —
+                # ZERO Spark jobs on the ledger path (r20; r19 had
+                # already collapsed it to one). Per micro-batch
+                # that removes ~0.3 s (collect) + ~0.5 s (staged
+                # write job) of fixed cost on the commit-dominated
+                # stream queries (guide §1.2/§5: driver does
+                # metadata work, executors data work — Delta's
+                # _delta_log entries are equally driver-written).
+                # Past LEDGER_GUARD_ROWS the contract is broken —
+                # and when the footers cannot answer, the size is
+                # unknown, so it is treated the same: the distributed
+                # replay test + a 1-row append (content-identical),
+                # and a warning. Nothing collects the ledger whole.
+                try:
+                    nrows = t.committed_rows(ledger_name)
+                    vals = None
+                    if nrows is None or nrows <= LEDGER_GUARD_ROWS:
+                        vals = t.committed_values(
+                            ledger_name, max_rows=LEDGER_GUARD_ROWS
                         )
-                        t.append(
-                            spark.createDataFrame(
-                                [(app_id, int(batch_id))], _LEDGER_SCHEMA
-                            ),
-                            ledger_name,
-                        )
-                    else:
-                        rows.append((app_id, int(batch_id)))
-                        t.overwrite_small(
-                            spark, rows, _LEDGER_SCHEMA, ledger_name
-                        )
-                return
-            except ConcurrentCommitError as exc:
-                last = exc  # snapshot moved: re-check the ledger, retry
-                time.sleep(0.02 * (attempt + 1))
-        raise last  # type: ignore[misc]
+                    rows = None if vals is None else [
+                        (v["app_id"], int(v["batch_id"])) for v in vals
+                    ]
+                except FileNotFoundError:
+                    rows = []
+                # replay test is MAX-based (r18): batch ids are
+                # strictly increasing per checkpoint and committed
+                # in order, so <= max means already committed —
+                # and the test stays complete after a retention
+                # fold keeps only the per-app max row. It runs
+                # BEFORE the emptiness probe (r20): a replayed
+                # batch then publishes nothing without paying any
+                # Spark job at all.
+                if rows is None:
+                    led = t.read_committed(spark, ledger_name)
+                    row = led.filter(led["app_id"] == app_id).agg(
+                        {"batch_id": "max"}
+                    ).first()
+                    latest = None if row[0] is None else int(row[0])
+                else:
+                    mine = [b for a, b in rows if a == app_id]
+                    latest = max(mine) if mine else None
+                if latest is not None and batch_id <= latest:
+                    return  # replayed batch: the bracket exits
+                    # empty and publishes nothing
+                if empty is None:
+                    empty = batch_df.isEmpty()
+                if empty:
+                    return  # an empty fresh batch is equally a no-op
+                stage(t, spark, batch_df)
+                if rows is None:
+                    warnings.warn(
+                        f"exactly-once ledger {ledger_name!r} is over "
+                        f"{LEDGER_GUARD_ROWS} rows or unreadable from "
+                        "its footers — committing via the distributed "
+                        "path; if it is over the guard, the retention "
+                        "fold (operators/retention.py fold_ledger) is "
+                        "overdue",
+                        RuntimeWarning,
+                        stacklevel=4,  # the sink's caller
+                    )
+                    t.append(
+                        spark.createDataFrame(
+                            [(app_id, int(batch_id))], _LEDGER_SCHEMA
+                        ),
+                        ledger_name,
+                    )
+                else:
+                    rows.append((app_id, int(batch_id)))
+                    t.overwrite_small(
+                        spark, rows, _LEDGER_SCHEMA, ledger_name
+                    )
+
+        return retry_on_conflict(attempt)
 
     return sink
 

@@ -344,3 +344,62 @@ def test_ledger_writes_are_driver_side_without_a_spark_job(spark, cat):
     assert cat.read(
         spark, xo.ledger_table("t")
     ).schema.simpleString() == "struct<app_id:string,batch_id:bigint>"
+
+
+def test_ledger_fallback_without_footers_appends_like_fast_path(
+    spark, tmp_path, monkeypatch
+):
+    """When the footers cannot answer (committed_rows AND
+    committed_values both None), the ledger's size is unknown, so the
+    sink must treat it as over the guard: distributed replay test + a
+    1-row ledger APPEND — never a whole-ledger collect and driver
+    rewrite. The committed data and ledger must equal the fast path's."""
+    import warnings as w
+
+    def run(cat):
+        sink = xo.exactly_once_batch_sink(cat, "t", "app")
+        for b in range(4):
+            sink(spark.createDataFrame([(b,)], "k long"), b)
+        head = cat.head()
+        sink(spark.createDataFrame([(99,)], "k long"), 2)  # replay
+        assert cat.head() == head
+        ledger = sorted(
+            (r["app_id"], r["batch_id"])
+            for r in cat.read(spark, xo.ledger_table("t")).collect()
+        )
+        return _rows(cat, spark, "t"), ledger
+
+    fast = run(txn.Catalog(str(tmp_path / "fast")))
+
+    # both footer readers fail: committed_rows/committed_values -> None
+    monkeypatch.setattr(txn, "version_rows", lambda *a, **kw: None)
+    monkeypatch.setattr(txn, "version_values", lambda *a, **kw: None)
+    monkeypatch.setattr(xo, "LEDGER_GUARD_ROWS", 1)
+    CT = txn.CatalogTransaction
+    calls: list[tuple[str, str]] = []
+    real_append, real_small = CT.append, CT.overwrite_small
+
+    def append(self, df, name):
+        calls.append(("append", name))
+        return real_append(self, df, name)
+
+    def overwrite_small(self, spark_, rows, ddl, name):
+        calls.append(("overwrite_small", name))
+        return real_small(self, spark_, rows, ddl, name)
+
+    monkeypatch.setattr(CT, "append", append)
+    monkeypatch.setattr(CT, "overwrite_small", overwrite_small)
+    with w.catch_warnings(record=True) as caught:
+        w.simplefilter("always")
+        forced = run(txn.Catalog(str(tmp_path / "forced")))
+
+    ledger_calls = [c for c in calls if c[1] == xo.ledger_table("t")]
+    # batch 0 creates the 1-row ledger; every later batch appends ONE
+    # row — the whole ledger is never collected and rewritten
+    lname = xo.ledger_table("t")
+    assert ledger_calls == [("overwrite_small", lname)] + [
+        ("append", lname)
+    ] * 3
+    assert any("retention fold" in str(c.message) for c in caught)
+    assert forced == fast
+    assert fast == ([0, 1, 2, 3], [("app", b) for b in range(4)])

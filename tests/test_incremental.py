@@ -3,6 +3,9 @@ order irrelevance, bootstrap, and atomic versioning."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from glue_jobs_for_data_pipeline_spark.operators import incremental
@@ -24,20 +27,20 @@ def test_incremental_equals_full_recompute_any_batch_order(spark, sf_dir, tmp_pa
 
     full = incremental.partial_aggs(o, keys, sums)
 
-    d1 = str(tmp_path / "r1")
+    c1 = txn.Catalog(str(tmp_path / "r1"))
     for b in batches:
-        incremental.refresh_rollup(spark, d1, b, keys, sums)
-    d2 = str(tmp_path / "r2")
+        incremental.refresh_rollup(spark, c1, "rollup", b, keys, sums)
+    c2 = txn.Catalog(str(tmp_path / "r2"))
     for b in reversed(batches):
-        incremental.refresh_rollup(spark, d2, b, keys, sums)
+        incremental.refresh_rollup(spark, c2, "rollup", b, keys, sums)
 
     assert (
-        _final(txn.read_committed(spark, d1))
-        == _final(txn.read_committed(spark, d2))
+        _final(c1.read(spark, "rollup"))
+        == _final(c2.read(spark, "rollup"))
         == _final(full)
     )
-    # one committed version per refresh: every merge was an atomic commit
-    assert txn.current_version(d1) == 3
+    # one committed manifest per refresh: every merge was an atomic commit
+    assert len(c1.log()) == 3
 
 
 def test_merge_passes_through_one_sided_keys(spark):
@@ -110,24 +113,24 @@ def test_dedup_ingest_first_arrival_wins_across_batches(spark, tmp_path):
         content_fingerprint,
     )
 
-    store = str(tmp_path / "fp_store")
+    store = txn.Catalog(str(tmp_path / "wh"))
     fp = content_fingerprint(F.col("text"))
     b1 = spark.createDataFrame(
         [(10, "alpha"), (11, "beta"), (12, "ALPHA  ")],  # 12 dups 10 (norm)
         "doc_id long, text string",
     )
-    adm1 = incremental.dedup_ingest(spark, store, b1, "doc_id", fp)
+    adm1 = incremental.dedup_ingest(spark, store, "fp_store", b1, "doc_id", fp)
     assert sorted(r["doc_id"] for r in adm1.collect()) == [10, 11]
     b2 = spark.createDataFrame(
         [(1, "beta"), (2, "gamma"), (3, "gamma")],  # 1 dups store; 3 dups 2
         "doc_id long, text string",
     )
-    adm2 = incremental.dedup_ingest(spark, store, b2, "doc_id", fp)
+    adm2 = incremental.dedup_ingest(spark, store, "fp_store", b2, "doc_id", fp)
     # beta already admitted (first arrival keeps id 11, NOT the smaller
     # late id 1); gamma is new, in-batch collapsed to min id 2
     assert sorted(r["doc_id"] for r in adm2.collect()) == [2]
     b3 = spark.createDataFrame([(99, "gamma")], "doc_id long, text string")
-    adm3 = incremental.dedup_ingest(spark, store, b3, "doc_id", fp)
+    adm3 = incremental.dedup_ingest(spark, store, "fp_store", b3, "doc_id", fp)
     assert adm3.collect() == []
 
 
@@ -142,7 +145,7 @@ def test_refresh_join_equals_full_recompute(spark, sf_dir, tmp_path):
     )
     from glue_jobs_for_data_pipeline_spark.sources.readers import load_table
 
-    store = str(tmp_path / "ivm")
+    store = txn.Catalog(str(tmp_path / "ivm"))
     o = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey")
@@ -155,11 +158,53 @@ def test_refresh_join_equals_full_recompute(spark, sf_dir, tmp_path):
     )
     # batch 1: even orders + ALL customers; batch 2: odd orders + NO
     # new customers (empty delta on one side must be handled)
-    refresh_join(spark, store, o.filter("o_orderkey % 2 = 0"), c, "_k")
+    refresh_join(spark, store, "j", o.filter("o_orderkey % 2 = 0"), c, "_k")
     got = refresh_join(
-        spark, store, o.filter("o_orderkey % 2 = 1"), c.limit(0), "_k"
+        spark, store, "j", o.filter("o_orderkey % 2 = 1"), c.limit(0), "_k"
     )
     want = o.join(c, "_k")
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def test_refresh_join_commits_a_b_and_j_in_one_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """The promise in refresh_join's docstring: A, B and J publish
+    together. Every refresh adds exactly ONE manifest that carries all
+    three tables, and an exception after A is staged leaves all three
+    at their previous versions (and nothing new in the log)."""
+    cat = txn.Catalog(str(tmp_path / "ivm"))
+    a = spark.createDataFrame([(1, "a1"), (2, "a2")], "_k long, av string")
+    b = spark.createDataFrame([(1, "b1"), (3, "b3")], "_k long, bv string")
+    for n, (da, db) in enumerate([(a, b), (a.limit(1), b.limit(1))], 1):
+        incremental.refresh_join(spark, cat, "j", da, db, "_k")
+        log = cat.log()
+        assert len(log) == n
+        assert log[-1]["changed"] == ["j", "j__a", "j__b"]
+    before = cat.manifest()
+    j_before = sorted(map(tuple, cat.read(spark, "j").collect()))
+
+    real_overwrite = txn.CatalogTransaction.overwrite
+
+    def crash_after_a(self, df, name, *args, **kw):
+        v = real_overwrite(self, df, name, *args, **kw)
+        if name == "j__a":
+            raise RuntimeError("crash after A staged")
+        return v
+
+    monkeypatch.setattr(txn.CatalogTransaction, "overwrite", crash_after_a)
+    with pytest.raises(RuntimeError, match="after A staged"):
+        incremental.refresh_join(spark, cat, "j", a, b, "_k")
+    monkeypatch.undo()
+
+    assert cat.manifest() == before
+    assert len(cat.log()) == 2
+    assert sorted(map(tuple, cat.read(spark, "j").collect())) == j_before
+    # the staged A version was rolled back, not left on disk
+    a_versions = [
+        int(d[2:]) for d in os.listdir(cat.table_dir("j__a"))
+        if d.startswith("v=")
+    ]
+    assert max(a_versions) == before["j__a"]

@@ -165,7 +165,7 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
     """Streaming SCD-2: batch 1 initial-loads the dim; batch 2 (one
     changed row, one new row) expires and re-versions only the changed
     key (delta mode) and appends the new one — matching the batch
-    kernel's semantics, with one committed txn version per batch."""
+    kernel's semantics, with one catalog manifest per batch."""
     import datetime as dt
 
     from glue_jobs_for_data_pipeline_spark.schemas import (
@@ -177,7 +177,7 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
     )
 
     src = str(tmp_path / "src")
-    dim_dir = str(tmp_path / "dim_customers")
+    cat = txn.Catalog(str(tmp_path / "wh"))
     ckpt = str(tmp_path / "ckpt")
     schema = "CustomerID long, Name string, City string"
     sentinel = dt.date.fromisoformat(CURRENT_ROW_SENTINEL)
@@ -190,11 +190,12 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
         [(1, "ann", "oslo"), (2, "bob", "rome"), (3, "cat", "lima")], schema
     ).coalesce(1).write.mode("append").parquet(src)
     scd2_stream_apply(
-        stream(), dim_dir, "CustomerID", ("CustomerID", "Name", "City"),
+        stream(), cat, "dim_customers", "CustomerID",
+        ("CustomerID", "Name", "City"),
         "CustomerKey", ckpt, run_date=dt.date(2024, 1, 1),
     )
-    v1 = txn.current_version(dim_dir)
-    d1 = txn.read_committed(spark, dim_dir).collect()
+    h1 = cat.head()
+    d1 = cat.read(spark, "dim_customers").collect()
     assert len(d1) == 3 and all(r["EndDate"] == sentinel for r in d1)
 
     # batch 2: bob moves, dan arrives (ann/cat untouched)
@@ -202,11 +203,12 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
         [(2, "bob", "kyiv"), (4, "dan", "baku")], schema
     ).coalesce(1).write.mode("append").parquet(src)
     scd2_stream_apply(
-        stream(), dim_dir, "CustomerID", ("CustomerID", "Name", "City"),
+        stream(), cat, "dim_customers", "CustomerID",
+        ("CustomerID", "Name", "City"),
         "CustomerKey", ckpt, run_date=dt.date(2024, 2, 1),
     )
-    assert txn.current_version(dim_dir) == v1 + 1
-    d2 = txn.read_committed(spark, dim_dir).collect()
+    assert cat.head() == h1 + 1
+    d2 = cat.read(spark, "dim_customers").collect()
     by_key = {}
     for r in d2:
         by_key.setdefault(r["CustomerID"], []).append(r)
@@ -221,10 +223,11 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
 
     # idempotent re-run: checkpoint drained, no new version
     scd2_stream_apply(
-        stream(), dim_dir, "CustomerID", ("CustomerID", "Name", "City"),
+        stream(), cat, "dim_customers", "CustomerID",
+        ("CustomerID", "Name", "City"),
         "CustomerKey", ckpt, run_date=dt.date(2024, 3, 1),
     )
-    assert txn.current_version(dim_dir) == v1 + 1
+    assert cat.head() == h1 + 1
 
 
 def test_scd2_stream_multi_version_batch_collapses(spark, tmp_path):
@@ -240,7 +243,7 @@ def test_scd2_stream_multi_version_batch_collapses(spark, tmp_path):
     )
 
     src = str(tmp_path / "src")
-    dim_dir = str(tmp_path / "dim")
+    cat = txn.Catalog(str(tmp_path / "wh"))
     schema = "CustomerID long, City string, seq long"
     sentinel = dt.date.fromisoformat(CURRENT_ROW_SENTINEL)
 
@@ -253,19 +256,19 @@ def test_scd2_stream_multi_version_batch_collapses(spark, tmp_path):
     ).parquet(src)
     scd2_stream_apply(
         spark.readStream.schema(schema).format("parquet").load(src),
-        dim_dir, "CustomerID", ("CustomerID", "City"), "CustomerKey",
+        cat, "dim", "CustomerID", ("CustomerID", "City"), "CustomerKey",
         str(tmp_path / "ckpt"), run_date=dt.date(2024, 1, 1),
         order_col="seq",
     )
-    rows = txn.read_committed(spark, dim_dir).collect()
+    rows = cat.read(spark, "dim").collect()
     current = [r for r in rows if r["EndDate"] == sentinel]
     assert len(current) == 1 and current[0]["City"] == "kyiv"
 
 
 def test_scd2_stream_replay_is_noop(spark, tmp_path):
-    """A replayed batch (crash between pointer swap and checkpoint
-    commit) must not double-apply: the committed _BATCH id makes the
-    replay a no-op."""
+    """A replayed batch (crash between the manifest commit and the
+    checkpoint commit) must not double-apply: the batch id committed in
+    the ledger makes the replay a no-op."""
     import datetime as dt
 
     from glue_jobs_for_data_pipeline_spark.sources import txn
@@ -274,7 +277,7 @@ def test_scd2_stream_replay_is_noop(spark, tmp_path):
     )
 
     src = str(tmp_path / "src")
-    dim_dir = str(tmp_path / "dim")
+    cat = txn.Catalog(str(tmp_path / "wh"))
     schema = "CustomerID long, City string"
     spark.createDataFrame([(1, "oslo")], schema).coalesce(1).write.mode(
         "append"
@@ -283,24 +286,24 @@ def test_scd2_stream_replay_is_noop(spark, tmp_path):
     # first run commits batch 0
     scd2_stream_apply(
         spark.readStream.schema(schema).format("parquet").load(src),
-        dim_dir, "CustomerID", ("CustomerID", "City"), "CustomerKey",
+        cat, "dim", "CustomerID", ("CustomerID", "City"), "CustomerKey",
         str(tmp_path / "ckpt1"), run_date=dt.date(2024, 1, 1),
         mode="reference",
     )
-    v1 = txn.current_version(dim_dir)
-    rows1 = sorted(map(tuple, txn.read_committed(spark, dim_dir).collect()))
+    h1 = cat.head()
+    rows1 = sorted(map(tuple, cat.read(spark, "dim").collect()))
 
     # simulate the crash window: a FRESH checkpoint replays batch 0
     # against the already-committed dim — reference mode would expire
     # and duplicate the rows if the replay were applied
     scd2_stream_apply(
         spark.readStream.schema(schema).format("parquet").load(src),
-        dim_dir, "CustomerID", ("CustomerID", "City"), "CustomerKey",
+        cat, "dim", "CustomerID", ("CustomerID", "City"), "CustomerKey",
         str(tmp_path / "ckpt2"), run_date=dt.date(2024, 2, 1),
         mode="reference",
     )
-    assert txn.current_version(dim_dir) == v1
-    rows2 = sorted(map(tuple, txn.read_committed(spark, dim_dir).collect()))
+    assert cat.head() == h1
+    rows2 = sorted(map(tuple, cat.read(spark, "dim").collect()))
     assert rows2 == rows1
 
 

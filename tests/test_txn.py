@@ -11,100 +11,115 @@ from glue_jobs_for_data_pipeline_spark.sources import txn
 
 
 @pytest.fixture()
-def tdir(tmp_path):
-    return str(tmp_path / "fact_orders")
+def cat(tmp_path):
+    return txn.Catalog(str(tmp_path / "wh"))
 
 
-def _vals(spark, d):
-    return sorted(r["v"] for r in txn.read_committed(spark, d).collect())
+def _vals(spark, cat, name="t"):
+    return sorted(r["v"] for r in cat.read(spark, name).collect())
 
 
-def test_overwrite_then_read_committed(spark, tdir):
-    txn.txn_overwrite(spark.range(3).selectExpr("id AS v"), tdir)
-    assert _vals(spark, tdir) == [0, 1, 2]
-    txn.txn_overwrite(spark.range(5, 7).selectExpr("id AS v"), tdir)
-    assert _vals(spark, tdir) == [5, 6]
-    assert txn.current_version(tdir) == 2
+def _overwrite(cat, df, name="t", partition_by=()):
+    with cat.transaction() as t:
+        t.overwrite(df, name, partition_by)
 
 
-def test_staged_but_unpublished_is_invisible(spark, tdir):
-    txn.txn_overwrite(spark.range(2).selectExpr("id AS v"), tdir)
+def test_overwrite_then_read_committed(spark, cat):
+    _overwrite(cat, spark.range(3).selectExpr("id AS v"))
+    assert _vals(spark, cat) == [0, 1, 2]
+    _overwrite(cat, spark.range(5, 7).selectExpr("id AS v"))
+    assert _vals(spark, cat) == [5, 6]
+    assert cat.manifest() == {"t": 2}
+
+
+def test_staged_but_unpublished_is_invisible(spark, cat):
+    _overwrite(cat, spark.range(2).selectExpr("id AS v"))
+    tdir = cat.table_dir("t")
     v = txn.stage_version(spark.range(100, 103).selectExpr("id AS v"), tdir)
-    # a crashed writer: full data on disk, pointer untouched
+    # a crashed writer: full data on disk, no manifest names it
     assert os.path.isdir(os.path.join(tdir, f"v={v}"))
-    assert _vals(spark, tdir) == [0, 1]
+    assert _vals(spark, cat) == [0, 1]
     # and the orphan version number is never reused
     assert txn.stage_version(spark.range(1).selectExpr("id AS v"), tdir) == v + 1
 
 
-def test_transaction_rolls_back_all_tables_on_failure(spark, tmp_path):
-    d1, d2 = str(tmp_path / "t1"), str(tmp_path / "t2")
-    txn.txn_overwrite(spark.range(1).selectExpr("id AS v"), d1)
-    txn.txn_overwrite(spark.range(1).selectExpr("id AS v"), d2)
+def test_transaction_rolls_back_all_tables_on_failure(spark, cat):
+    with cat.transaction() as t:
+        t.overwrite(spark.range(1).selectExpr("id AS v"), "t1")
+        t.overwrite(spark.range(1).selectExpr("id AS v"), "t2")
+    head = cat.head()
     with pytest.raises(RuntimeError, match="mid-pipeline"):
-        with txn.Transaction() as t:
-            t.overwrite(spark.range(10, 12).selectExpr("id AS v"), d1)
+        with cat.transaction() as t:
+            t.overwrite(spark.range(10, 12).selectExpr("id AS v"), "t1")
             raise RuntimeError("mid-pipeline failure after first write")
     # committed views of BOTH tables unchanged; staged version removed
-    assert _vals(spark, d1) == [0] and _vals(spark, d2) == [0]
-    assert txn.current_version(d1) == 1
-    assert not os.path.isdir(os.path.join(d1, "v=2"))
+    assert _vals(spark, cat, "t1") == [0] and _vals(spark, cat, "t2") == [0]
+    assert cat.head() == head
+    assert not os.path.isdir(os.path.join(cat.table_dir("t1"), "v=2"))
 
 
-def test_transaction_commits_all_tables_on_success(spark, tmp_path):
-    d1, d2 = str(tmp_path / "t1"), str(tmp_path / "t2")
-    txn.txn_overwrite(spark.range(1).selectExpr("id AS v"), d1)
-    txn.txn_overwrite(spark.range(1).selectExpr("id AS v"), d2)
-    with txn.Transaction() as t:
-        t.overwrite(spark.range(10, 12).selectExpr("id AS v"), d1)
-        t.overwrite(spark.range(20, 23).selectExpr("id AS v"), d2)
-    assert _vals(spark, d1) == [10, 11]
-    assert _vals(spark, d2) == [20, 21, 22]
+def test_transaction_commits_all_tables_on_success(spark, cat):
+    with cat.transaction() as t:
+        t.overwrite(spark.range(1).selectExpr("id AS v"), "t1")
+        t.overwrite(spark.range(1).selectExpr("id AS v"), "t2")
+    with cat.transaction() as t:
+        t.overwrite(spark.range(10, 12).selectExpr("id AS v"), "t1")
+        t.overwrite(spark.range(20, 23).selectExpr("id AS v"), "t2")
+    assert _vals(spark, cat, "t1") == [10, 11]
+    assert _vals(spark, cat, "t2") == [20, 21, 22]
 
 
-def test_compact_reduces_files_preserves_rows(spark, tdir):
+def test_compact_reduces_files_preserves_rows(spark, cat):
     # fragment: 64 partitions -> 64 tiny files
     frag = spark.range(10_000).selectExpr("id AS v").repartition(64)
-    txn.txn_overwrite(frag, tdir)
-    v1 = os.path.join(tdir, "v=1")
+    _overwrite(cat, frag)
+    v1 = os.path.join(cat.table_dir("t"), "v=1")
     n_before = sum(f.endswith(".parquet") for f in os.listdir(v1))
     assert n_before == 64
-    new_v = txn.compact(spark, tdir, target_file_bytes=128 << 20)
-    assert new_v == 2 and txn.current_version(tdir) == 2
-    v2 = os.path.join(tdir, f"v={new_v}")
+    cat.compact_table(spark, "t", target_file_bytes=128 << 20)
+    assert cat.manifest() == {"t": 2}
+    v2 = os.path.join(cat.table_dir("t"), "v=2")
     n_after = sum(f.endswith(".parquet") for f in os.listdir(v2))
     assert n_after == 1  # well under one target-size file
-    assert txn.read_committed(spark, tdir).count() == 10_000
-    # old fragmented version still present until vacuumed
+    assert cat.read(spark, "t").count() == 10_000
+    # old fragmented version still present until its snapshot expires
     assert os.path.isdir(v1)
-    txn.vacuum(tdir, keep=1)
+    cat.expire_snapshots(keep_last=1, grace_seconds=0)
     assert not os.path.isdir(v1)
 
 
-def test_vacuum_keeps_window_and_inflight(spark, tdir):
+def test_vacuum_keeps_window_and_inflight(spark, cat):
+    import time
+
     for i in range(4):
-        txn.txn_overwrite(spark.range(i + 1).selectExpr("id AS v"), tdir)
-    staged = txn.stage_version(spark.range(9).selectExpr("id AS v"), tdir)
-    removed = txn.vacuum(tdir, keep=2)
-    assert removed == [1, 2]
+        _overwrite(cat, spark.range(i + 1).selectExpr("id AS v"))
+    # the committed versions are an hour old; the staged one is fresh
+    old = time.time() - 3600
+    for v in range(1, 5):
+        os.utime(txn._version_dir(cat.table_dir("t"), v), (old, old))
+    staged = txn.stage_version(
+        spark.range(9).selectExpr("id AS v"), cat.table_dir("t")
+    )
+    report = cat.expire_snapshots(keep_last=2, grace_seconds=300)
+    assert report["reclaimed"].get("t") == [1, 2]
     # committed + predecessor + in-flight staging survive
-    assert txn.current_version(tdir) == 4
-    assert _vals(spark, tdir) == [0, 1, 2, 3]
-    assert os.path.isdir(os.path.join(tdir, f"v={staged}"))
+    assert cat.manifest() == {"t": 4}
+    assert _vals(spark, cat) == [0, 1, 2, 3]
+    assert os.path.isdir(os.path.join(cat.table_dir("t"), f"v={staged}"))
 
 
-def test_compact_preserves_partition_layout(spark, tdir):
+def test_compact_preserves_partition_layout(spark, cat):
     """Compacting a partitioned table must keep the col=value directory
     layout (pruning survives) and the committed rows."""
     df = spark.createDataFrame(
         [(i, i % 3) for i in range(300)], "v long, dk int"
     ).repartition(16)
-    txn.txn_overwrite(df, tdir, partition_by=("dk",))
-    new_v = txn.compact(spark, tdir, target_file_bytes=128 << 20)
-    vdir = os.path.join(tdir, f"v={new_v}")
+    _overwrite(cat, df, partition_by=("dk",))
+    cat.compact_table(spark, "t", target_file_bytes=128 << 20)
+    vdir = txn._version_dir(cat.table_dir("t"), cat.manifest()["t"])
     subdirs = sorted(d for d in os.listdir(vdir) if d.startswith("dk="))
     assert subdirs == ["dk=0", "dk=1", "dk=2"]
-    out = txn.read_committed(spark, tdir)
+    out = cat.read(spark, "t")
     assert out.count() == 300
     assert sorted(out.columns) == ["dk", "v"]
     # far fewer files than the 16-way fragmented original
@@ -115,77 +130,53 @@ def test_compact_preserves_partition_layout(spark, tdir):
     assert n_files <= 3
 
 
-def test_transaction_partial_publish_preserves_staged(spark, tmp_path, monkeypatch):
-    """If a publish fails partway through commit, the unpublished
-    remainder must stay staged so the caller can retry or roll back."""
-    d1, d2 = str(tmp_path / "t1"), str(tmp_path / "t2")
-    txn.txn_overwrite(spark.range(1).selectExpr("id AS v"), d1)
-    txn.txn_overwrite(spark.range(1).selectExpr("id AS v"), d2)
+# -------------------------------------------------------------------------
+# retry_on_conflict: the one CAS-retry loop
+# -------------------------------------------------------------------------
 
-    real_publish = txn._publish
+
+def test_retry_on_conflict_retries_only_cas_losses(monkeypatch):
+    sleeps: list[float] = []
+    monkeypatch.setattr(txn.time, "sleep", sleeps.append)
     calls = {"n": 0}
 
-    def flaky_publish(table_dir, version):
+    def flaky():
         calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("simulated pointer-swap failure")
-        real_publish(table_dir, version)
+        if calls["n"] < 3:
+            raise txn.ConcurrentCommitError(f"lost #{calls['n']}")
+        return "committed"
 
-    monkeypatch.setattr(txn, "_publish", flaky_publish)
-    t = txn.Transaction()
-    with pytest.raises(OSError, match="pointer-swap"):
-        with t:
-            t.overwrite(spark.range(10, 12).selectExpr("id AS v"), d1)
-            t.overwrite(spark.range(20, 23).selectExpr("id AS v"), d2)
-    # first table published, second still staged with its handle intact
-    assert _vals(spark, d1) == [10, 11]
-    assert _vals(spark, d2) == [0]
-    assert t.staged == [(d2, 2)]
-    # retry completes the commit
-    monkeypatch.setattr(txn, "_publish", real_publish)
-    t.publish_staged()
-    assert _vals(spark, d2) == [20, 21, 22]
-    assert t.staged == []
+    assert txn.retry_on_conflict(flaky) == "committed"
+    assert calls["n"] == 3
+    assert sleeps == [0.02, 0.04]  # linear back-off per lost race
 
 
-def test_transaction_partial_publish_discard(spark, tmp_path, monkeypatch):
-    """Alternative recovery: discard the unpublished remainder; the
-    already-published tables stay published."""
-    d1, d2 = str(tmp_path / "t1"), str(tmp_path / "t2")
-    txn.txn_overwrite(spark.range(1).selectExpr("id AS v"), d1)
-    txn.txn_overwrite(spark.range(1).selectExpr("id AS v"), d2)
-
-    real_publish = txn._publish
+def test_retry_on_conflict_gives_up_and_reraises_last(monkeypatch):
+    monkeypatch.setattr(txn.time, "sleep", lambda s: None)
     calls = {"n": 0}
 
-    def flaky_publish(table_dir, version):
+    def always_loses():
         calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("simulated pointer-swap failure")
-        real_publish(table_dir, version)
+        raise txn.ConcurrentCommitError(f"lost #{calls['n']}")
 
-    monkeypatch.setattr(txn, "_publish", flaky_publish)
-    t = txn.Transaction()
-    with pytest.raises(OSError):
-        with t:
-            t.overwrite(spark.range(10, 12).selectExpr("id AS v"), d1)
-            t.overwrite(spark.range(20, 23).selectExpr("id AS v"), d2)
-    t.discard_staged()
-    assert _vals(spark, d2) == [0]
-    assert not os.path.isdir(os.path.join(d2, "v=2"))
-    assert t.staged == []
+    with pytest.raises(txn.ConcurrentCommitError) as exc:
+        txn.retry_on_conflict(always_loses)
+    assert calls["n"] == txn._COMMIT_RETRIES == 16
+    assert str(exc.value) == "lost #16"
 
 
-def test_gc_orphans_removes_only_newer_than_pointer(spark, tdir):
-    txn.txn_overwrite(spark.range(2).selectExpr("id AS v"), tdir)
-    txn.txn_overwrite(spark.range(3).selectExpr("id AS v"), tdir)
-    orphan = txn.stage_version(spark.range(9).selectExpr("id AS v"), tdir)
-    assert txn.gc_orphans(tdir) == [orphan]
-    assert not os.path.isdir(os.path.join(tdir, f"v={orphan}"))
-    # committed window untouched
-    assert txn.current_version(tdir) == 2
-    assert _vals(spark, tdir) == [0, 1, 2]
-    assert os.path.isdir(os.path.join(tdir, "v=1"))
+def test_retry_on_conflict_propagates_other_errors_at_once(monkeypatch):
+    sleeps: list[float] = []
+    monkeypatch.setattr(txn.time, "sleep", sleeps.append)
+    calls = {"n": 0}
+
+    def broken():
+        calls["n"] += 1
+        raise ValueError("not a conflict")
+
+    with pytest.raises(ValueError, match="not a conflict"):
+        txn.retry_on_conflict(broken)
+    assert calls["n"] == 1 and sleeps == []
 
 
 # -------------------------------------------------------------------------
