@@ -1,33 +1,47 @@
-"""Merge-on-read UPSERT over the transactional catalog (r17).
+"""Merge-on-read UPSERT, and the ONE merge-on-read reader and fold
+over the transactional catalog (r17).
 
 The reference's UPDATE..WHERE (dynamic_upsert.py:110-127) and the
 repo's MERGE key (x_merge_into) rewrite the whole table version —
 correct, and absurd at 100 TB when a CDC batch touches 0.01% of rows.
-``operators/deletes.py`` (r16) already solved the DELETE half with a
-keys-only deletion vector; this module completes the write side with
-the Hudi-MOR / Iceberg-v2 posture for UPDATE+INSERT:
+A merge-on-read table ``T`` keeps its base version untouched and puts
+each write into a side table beside it, each an ordinary catalog
+table:
 
-- upserted rows land in a tiny DELTA table (``T__delta``) holding the
-  LATEST version of each touched key — the "log file" of a Hudi
-  merge-on-read table;
-- the base version directory is untouched;
-- ``read_upserted`` resolves the logical state with one broadcast
-  anti-join + union: (base ANTI delta-keys) ∪ delta — the base side
-  never shuffles, the delta is small by contract;
-- ``compact_upserts`` folds the delta into a new base and empties it
-  in ONE atomic manifest commit (readers see either (old base, full
-  delta) or (new base, empty delta), never both or neither).
+- ``T__delta`` (``upsert_into``, this module): the LATEST version of
+  each upserted key — the "log file" of a Hudi merge-on-read table;
+- ``T__dv`` (``deletes.delete_where``): deleted keys — the Iceberg v2
+  equality delete / Delta deletion vector;
+- ``T__pdv`` (``positional_deletes.delete_where_positional``): deleted
+  (file, row) positions — the Iceberg v2 positional delete.
 
-Composition with deletes: both side tables are ordinary catalog
-tables, so a transaction can carry a delete batch and an upsert batch
-together, and the combined reader applies ((base ANTI delta) ANTI dv)
-∪ (delta ANTI dv) — a delete always beats a stale upsert of the same
-key because the dv is applied LAST.
+One private plan, ``_logical``, applies them, and it has exactly two
+callers: ``read_logical`` (the table's logical state at the pinned
+head) and ``fold`` (rewrite the base with that state and empty every
+applied side table in ONE atomic manifest commit — the Hudi/Iceberg
+compaction shape, one pass over the base whatever mix of debt is
+pending). The plan resolves base and side tables from ONE pinned
+manifest, skips side tables that are absent or footer-empty (no Spark
+job), and applies them in a fixed order:
 
-Concurrency: same CAS-retry posture as deletes.py — reads go through
-the transaction snapshot, the commit loses to any racing writer on the
-branch and retries from a fresh union, so concurrent upsert batches
-merge instead of clobbering (proven in tests/test_mor_upsert.py).
+1. ``__pdv`` anti-joins the base scan on its (file, row) positions —
+   first, because positions name base files only;
+2. ``(base ANTI delta-keys) ∪ delta`` — a later upsert wins;
+3. ``ANTI dv`` — last, so a delete beats a stale upsert of the same
+   key (``upsert_into`` purges the dv of the keys it writes, so an
+   upsert after a delete still resurrects the key).
+
+Every side table is tiny by contract and is broadcast; the base side
+never shuffles. Because ``fold`` rewrites the base with exactly the
+plan ``read_logical`` returns, reads are identical across a fold by
+construction.
+
+Concurrency: writers and ``fold`` read through the transaction
+snapshot and commit through ``retry_on_conflict`` — a commit loses to
+any racing writer on the branch and retries from a fresh snapshot, so
+concurrent batches merge instead of clobbering, and a write that lands
+mid-fold is folded on the retry rather than dropped (proven in
+tests/test_mor_upsert.py and tests/test_deletes.py).
 """
 
 from __future__ import annotations
@@ -36,8 +50,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..sources import txn
 from ..sources.txn import Catalog, retry_on_conflict
-from .deletes import _read_dv_asof, base_partition_cols, dv_table
+from .deletes import base_partition_cols, dv_table
+from .positional_deletes import _FILE_COL, _POS_COL, _scan_with_pos, pdv_table
 
 _DELTA_SUFFIX = "__delta"
 
@@ -80,11 +96,8 @@ def upsert_into(
     unreadable delta-only black hole; code-review r17). An upsert
     RESURRECTS a previously deleted key: the same commit rewrites the
     deletion vector as dv ANTI batch-keys — without this the
-    dv-applies-last read suppressed the fresh upsert and the logical
-    state became compaction-order-dependent (compact_deletes emptied
-    the dv and resurrected the stale row; compact_upserts-first
-    dropped the upsert forever; ADVICE r17). Returns the commit's own
-    manifest id."""
+    dv-applies-last read suppressed the fresh upsert (ADVICE r17).
+    Returns the commit's own manifest id."""
 
     def attempt():
         with cat.transaction(branch=branch) as t:
@@ -134,109 +147,130 @@ def upsert_into(
     return retry_on_conflict(attempt)
 
 
-def read_upserted(
+def _has_rows(df: DataFrame, nrows: int | None) -> bool:
+    """Non-empty test for a side table ``_logical`` applied: its footer
+    count when the footers answered (never 0 — those are skipped), a
+    Spark ``isEmpty`` scan when they could not."""
+    return nrows is not None or not df.isEmpty()
+
+
+def _logical(
     cat: Catalog,
     spark: SparkSession,
     name: str,
     key_cols: tuple[str, ...],
-    branch: str = "main",
-) -> DataFrame:
-    """The table's LOGICAL state under merge-on-read writes:
-    ((base ANTI delta-keys) ∪ delta) ANTI dv. Base, delta, and dv all
-    resolve from ONE pinned manifest snapshot (the deletes.py ADVICE
-    r16 lesson applied from birth), so a compaction or delete landing
-    mid-read can never mix generations. The dv applies LAST: a deleted
-    key stays deleted even if a stale delta row for it survives until
-    the next compaction."""
-    h = cat.head(branch)
-    if h is None:
-        return cat.read(spark, name, branch)  # surfaces FileNotFoundError
-    base = cat.read_asof(spark, name, h)
-    try:
-        delta = cat.read_asof(spark, delta_table(name), h)
-    except FileNotFoundError:
-        delta = None
-    if delta is not None:
-        base = base.join(
+    manifest: int | None,
+) -> tuple[DataFrame, dict[str, tuple[DataFrame, int | None]]]:
+    """The ONE merge-on-read plan (see the module docstring for the
+    order): ``name``'s logical state at ``manifest``, base and every
+    side table resolved from that one manifest. Returns (plan, sides):
+    ``sides`` maps each side table the plan applied to (its DataFrame,
+    its footer row count — None when the footers cannot answer). A
+    side table that is absent or whose footers count 0 rows is skipped
+    without a Spark job. Raises FileNotFoundError when ``name`` is not
+    in the manifest, ValueError when a non-empty delta or dv needs
+    ``key_cols`` and none were given."""
+    versions = cat._manifest_tables(manifest)
+    sides: dict[str, tuple[DataFrame, int | None]] = {}
+    for side in (pdv_table(name), delta_table(name), dv_table(name)):
+        if side in versions:
+            nrows = txn.version_rows(cat.table_dir(side), versions[side])
+            if nrows != 0:
+                sides[side] = (cat.read_asof(spark, side, manifest), nrows)
+    if not key_cols:
+        for side in (delta_table(name), dv_table(name)):
+            if side in sides and _has_rows(*sides[side]):
+                raise ValueError(
+                    f"{side!r} has rows but no key_cols were given"
+                )
+            sides.pop(side, None)
+    if pdv_table(name) in sides:
+        base = _scan_with_pos(cat, spark, name, manifest)
+        pdv = sides[pdv_table(name)][0]
+        plan = base.join(
+            F.broadcast(
+                pdv.select(
+                    F.col("file").alias(_FILE_COL),
+                    F.col("pos").alias(_POS_COL),
+                )
+            ),
+            on=[_FILE_COL, _POS_COL],
+            how="left_anti",
+        ).drop(_FILE_COL, _POS_COL)
+    else:
+        plan = cat.read_asof(spark, name, manifest)
+    if delta_table(name) in sides:
+        delta = sides[delta_table(name)][0]
+        plan = plan.join(
             F.broadcast(delta.select(*key_cols)),
             on=list(key_cols),
             how="left_anti",
         ).unionByName(delta)
-    dv = _read_dv_asof(cat, spark, name, h)
-    if dv is not None:
-        base = base.join(F.broadcast(dv), on=list(key_cols), how="left_anti")
-    return base
+    if dv_table(name) in sides:
+        plan = plan.join(
+            F.broadcast(sides[dv_table(name)][0].select(*key_cols)),
+            on=list(key_cols),
+            how="left_anti",
+        )
+    return plan, sides
 
 
-def compact_full(
+def read_logical(
     cat: Catalog,
     spark: SparkSession,
     name: str,
-    key_cols: tuple[str, ...],
+    key_cols: tuple[str, ...] = (),
+    branch: str = "main",
+) -> DataFrame:
+    """The table's LOGICAL state on ``branch``: base with every pending
+    side table applied, all resolved from ONE pinned head, so a fold or
+    write landing mid-read can never mix generations (ADVICE r16: two
+    independent head reads handed a reader old base + emptied dv).
+    ``key_cols`` is required only while a delta or dv has rows."""
+    return _logical(cat, spark, name, key_cols, cat.head(branch))[0]
+
+
+def fold(
+    cat: Catalog,
+    spark: SparkSession,
+    name: str,
+    key_cols: tuple[str, ...] = (),
     branch: str = "main",
     n_files: int | None = None,
 ) -> int | None:
-    """Fold the upsert delta AND the key deletion vector into the base
-    in ONE rewrite + ONE atomic manifest commit — the Hudi/Iceberg
-    compaction shape (apply every log file in a single pass) and the
-    reason retention runs this instead of compact_upserts followed by
-    compact_deletes: at 100 TB the base rewrite IS the cost, so two
-    sequential folds double it for nothing. The merged plan is the
-    read path itself — ((base ANTI delta-keys) ∪ delta) ANTI dv — so
-    reads are identical across the swap by construction. Optional
-    ``n_files`` repartitions the rewrite (retention folds file-count
-    debt in the same pass). Returns the commit's manifest id, or None
-    when neither side table has rows AND no repartition was requested."""
+    """Fold every pending side table into the base: rewrite the base
+    as ``read_logical``'s plan (keeping its partition layout) and empty
+    each side table the plan applied, in ONE transaction — a reader
+    sees either (old base, full side tables) or (new base, empty side
+    tables), never a mix. Optional ``n_files`` repartitions the rewrite
+    (``Catalog.compact_table``'s sizing, so retention folds file-count
+    debt in the same pass). Returns the commit's own manifest id, or
+    None when no side table has rows and no repartition was asked for —
+    rewriting a 100 TB base to apply nothing is not a no-op.
+
+    Concurrency: any write landing between this fold's snapshot read
+    and its commit (an upsert, a key delete, a positional delete) makes
+    the commit lose its CAS; the retry re-plans from the new snapshot
+    and folds that write too, so nothing is dropped or resurrected."""
 
     def attempt():
         with cat.transaction(branch=branch) as t:
-
-            def _side(side_name: str) -> DataFrame | None:
-                # footer-count fast path for the emptiness test
-                # (no Spark job; falls back to a scan — r19)
-                try:
-                    df = t.read_committed(spark, side_name)
-                    nrows = t.committed_rows(side_name)
-                except FileNotFoundError:
-                    return None
-                if nrows == 0 or (nrows is None and df.isEmpty()):
-                    return None
-                return df
-
-            delta = _side(delta_table(name))
-            dv = _side(dv_table(name))
-            if delta is None and dv is None and n_files is None:
+            plan, sides = _logical(
+                cat, spark, name, key_cols, t._expected_head
+            )
+            pending = {
+                side: df
+                for side, (df, nrows) in sides.items()
+                if _has_rows(df, nrows)
+            }
+            if not pending and n_files is None:
                 return None
-            from .positional_deletes import (
-                guard_no_pending_positional_deletes,
-            )
-
-            guard_no_pending_positional_deletes(
-                cat, spark, name, t._expected_head
-            )
-            merged = t.read_committed(spark, name)
-            if delta is not None:
-                merged = merged.join(
-                    F.broadcast(delta.select(*key_cols)),
-                    on=list(key_cols),
-                    how="left_anti",
-                ).unionByName(delta)
-            if dv is not None:
-                merged = merged.join(
-                    F.broadcast(dv.select(*key_cols)),
-                    on=list(key_cols),
-                    how="left_anti",
-                )
+            part_by = base_partition_cols(cat, name, t._expected_head)
             if n_files is not None:
-                merged = merged.repartition(max(1, n_files))
-            t.overwrite(
-                merged, name,
-                base_partition_cols(cat, name, t._expected_head),
-            )
-            if delta is not None:
-                t.truncate(delta, delta_table(name))
-            if dv is not None:
-                t.truncate(dv, dv_table(name))
+                plan = plan.repartition(max(1, n_files), *part_by)
+            t.overwrite(plan, name, part_by)
+            for side, df in pending.items():
+                t.truncate(df, side)
         return t.committed_manifest
 
     return retry_on_conflict(attempt)
@@ -253,7 +287,7 @@ def evolve_upserted_schema(
     and ``__dv`` side tables in ONE metadata commit (ADVICE r17:
     ``Catalog.evolve_schema`` records ops per table name, so evolving
     only the base left a pre-evolution delta that made
-    ``read_upserted``'s unionByName fail loudly). Replay is idempotent
+    ``read_logical``'s unionByName fail loudly). Replay is idempotent
     per file generation, so a keys-only dv that lacks the op's column
     is unaffected by renames of other columns and simply gains nothing
     from drops of columns it never had."""
@@ -271,55 +305,3 @@ def evolve_upserted_schema(
     return cat._commit(
         {}, expected_head=head, branch=branch, schema_ops=schema_ops
     )
-
-
-def compact_upserts(
-    cat: Catalog,
-    spark: SparkSession,
-    name: str,
-    key_cols: tuple[str, ...],
-    branch: str = "main",
-) -> int | None:
-    """Fold the delta into the base — rewrite (base ANTI delta) ∪ delta
-    as the new base AND empty the delta in ONE manifest commit. A
-    racing upsert makes this commit lose its CAS and retry with the
-    larger delta, so nothing is ever silently dropped. Returns this
-    compaction's own manifest id, or None when there was no delta to
-    fold (no commit happened — a head re-read here could attribute a
-    racing writer's manifest to this no-op; code-review r17)."""
-
-    def attempt():
-        with cat.transaction(branch=branch) as t:
-            try:
-                delta = t.read_committed(spark, delta_table(name))
-                nrows = t.committed_rows(delta_table(name))
-            except FileNotFoundError:
-                return None
-            if nrows == 0 or (nrows is None and delta.isEmpty()):
-                # nothing to fold — never rewrite the base for an
-                # already-compacted delta (r18)
-                return None
-            from .positional_deletes import (
-                guard_no_pending_positional_deletes,
-            )
-
-            guard_no_pending_positional_deletes(
-                cat, spark, name, t._expected_head
-            )
-            merged = (
-                t.read_committed(spark, name)
-                .join(
-                    F.broadcast(delta.select(*key_cols)),
-                    on=list(key_cols),
-                    how="left_anti",
-                )
-                .unionByName(delta)
-            )
-            t.overwrite(
-                merged, name,
-                base_partition_cols(cat, name, t._expected_head),
-            )
-            t.truncate(delta, delta_table(name))
-        return t.committed_manifest
-
-    return retry_on_conflict(attempt)

@@ -23,20 +23,22 @@ relative path with identical bytes (txn.py stage_version_append), so
 positional deletes stay valid across any number of appends — exactly
 the Iceberg contract (delete files reference immutable data files; new
 data files are born undeleted). A REWRITE (overwrite / compact_table)
-mints fresh part files, so prior anchors no longer resolve; rewrites
-must therefore fold pending positional deletes first —
-``compact_positional_deletes`` does apply-then-rewrite in ONE atomic
-manifest commit, and is the only rewrite this module sanctions while a
-pdv is non-empty. (Part-file names embed a writer UUID, so a stale
-anchor can never collide with a new file's name.)
+mints fresh part files, so prior anchors no longer resolve: the
+catalog's own rewrites (``Catalog.compact_table`` /
+``compact_partitions``) refuse while a pdv is non-empty
+(``Catalog._pdv_nonempty``), and ``mor_upsert.fold`` is the rewrite
+that applies the pdv and empties it in ONE atomic manifest commit.
+(Part-file names embed a writer UUID, so a stale anchor can never
+collide with a new file's name.)
 
 Scale shape: the pdv is (file, pos) pairs — KBs for realistic delete
-rates. ``read_positional`` broadcasts it into a LEFT ANTI hash join
-against the base scan; the 100 TB side never shuffles, and at real
-cluster scale the same pairs would push down further as parquet
-row-group skips (the Delta DV fast path). Commit/concurrency posture
-is identical to deletes.py: read through the transaction snapshot,
-CAS-retry on racing writers.
+rates. This module only WRITES it; the one logical-state reader
+(``mor_upsert.read_logical``) broadcasts it into a LEFT ANTI hash join
+against this module's positional base scan (``_scan_with_pos``), so
+the 100 TB side never shuffles, and at real cluster scale the same
+pairs would push down further as parquet row-group skips (the Delta
+DV fast path). Commit/concurrency posture is identical to deletes.py:
+read through the transaction snapshot, CAS-retry on racing writers.
 
 Reference parity note: the reference's only delete surface is
 UPDATE/DELETE-by-predicate in Redshift (dynamic_upsert.py:110-127);
@@ -52,7 +54,6 @@ from pyspark.sql import functions as F
 from ..sources.txn import (
     Catalog,
     _apply_schema_ops,
-    _detect_partition_cols,
     _read_version_df,
     _version_dir,
     retry_on_conflict,
@@ -65,45 +66,6 @@ _POS_COL = "_pd_pos"
 
 def pdv_table(name: str) -> str:
     return name + _PDV_SUFFIX
-
-
-def has_pending_positional_deletes(
-    cat: Catalog, spark: SparkSession, name: str, manifest: int | None
-) -> bool:
-    """True iff ``name`` has a NON-EMPTY positional-delete table in
-    ``manifest``. Every base-rewrite primitive consults this and
-    refuses while it holds (code-review r18): a rewrite mints fresh
-    part files, the stale (file,pos) anchors then match nothing, and
-    the deletes silently resurrect — fold them first
-    (compact_positional_deletes)."""
-    versions = cat._manifest_tables(manifest)
-    if pdv_table(name) not in versions:
-        return False
-    from ..sources.txn import version_rows
-
-    # footer-count fast path — this guard runs inside EVERY rewrite
-    # primitive, so a Spark isEmpty job here taxed every compaction
-    # whether or not positional deletes were in play (r19)
-    nrows = version_rows(
-        cat.table_dir(pdv_table(name)), versions[pdv_table(name)]
-    )
-    if nrows is not None:
-        return nrows > 0
-    vdir = _version_dir(
-        cat.table_dir(pdv_table(name)), versions[pdv_table(name)]
-    )
-    return not _read_version_df(spark, vdir).isEmpty()
-
-
-def guard_no_pending_positional_deletes(
-    cat: Catalog, spark: SparkSession, name: str, manifest: int | None
-) -> None:
-    if has_pending_positional_deletes(cat, spark, name, manifest):
-        raise ValueError(
-            f"table {name!r} has pending positional deletes; "
-            "compact_positional_deletes() before rewriting the base "
-            "(a rewrite strands (file,pos) anchors and resurrects rows)"
-        )
 
 
 def _scan_with_pos(
@@ -175,92 +137,6 @@ def delete_where_positional(
             except FileNotFoundError:
                 pass
             t.overwrite(hits, pdv_table(name))
-        return t.committed_manifest
-
-    return retry_on_conflict(attempt)
-
-
-def read_positional(
-    cat: Catalog,
-    spark: SparkSession,
-    name: str,
-    branch: str = "main",
-) -> DataFrame:
-    """The table's LOGICAL state: base scan minus positionally deleted
-    rows, applied as a broadcast LEFT ANTI join on (file, pos) — the
-    pdv is tiny by contract, the base side never shuffles. Base and
-    pdv resolve from ONE pinned manifest snapshot (the r16/r17
-    read-atomicity lesson), so a compaction landing mid-read can never
-    mix generations."""
-    h = cat.head(branch)
-    if h is None:
-        return cat.read(spark, name, branch)  # surfaces FileNotFoundError
-    base = _scan_with_pos(cat, spark, name, h)
-    out_cols = [c for c in base.columns if c not in (_FILE_COL, _POS_COL)]
-    try:
-        pdv = cat.read_asof(spark, pdv_table(name), h)
-    except FileNotFoundError:
-        return base.select(*out_cols)
-    return base.join(
-        F.broadcast(
-            pdv.select(
-                F.col("file").alias(_FILE_COL),
-                F.col("pos").alias(_POS_COL),
-            )
-        ),
-        on=[_FILE_COL, _POS_COL],
-        how="left_anti",
-    ).select(*out_cols)
-
-
-def compact_positional_deletes(
-    cat: Catalog,
-    spark: SparkSession,
-    name: str,
-    branch: str = "main",
-) -> int | None:
-    """Fold the pdv into the base: rewrite base-minus-deleted-positions
-    as the new base version AND reset the pdv to empty, in ONE atomic
-    manifest commit. This is the ONLY sanctioned rewrite while a pdv is
-    non-empty — any other rewrite mints new part files whose anchors
-    the pending deletes cannot reach (they would silently no-op, which
-    for a delete means resurrect). Returns this compaction's own
-    manifest id, or None when there was no pdv to fold (absent OR
-    already empty — rewriting a 100 TB base to fold zero deletes is
-    not a no-op). A racing delete batch makes this commit lose its CAS
-    and retry with the larger pdv, so nothing is silently
-    resurrected."""
-
-    def attempt():
-        with cat.transaction(branch=branch) as t:
-            try:
-                pdv = t.read_committed(spark, pdv_table(name))
-                nrows = t.committed_rows(pdv_table(name))
-            except FileNotFoundError:
-                return None
-            if nrows == 0 or (nrows is None and pdv.isEmpty()):
-                return None
-            base = _scan_with_pos(cat, spark, name, t._expected_head)
-            out_cols = [
-                c for c in base.columns
-                if c not in (_FILE_COL, _POS_COL)
-            ]
-            merged = base.join(
-                F.broadcast(
-                    pdv.select(
-                        F.col("file").alias(_FILE_COL),
-                        F.col("pos").alias(_POS_COL),
-                    )
-                ),
-                on=[_FILE_COL, _POS_COL],
-                how="left_anti",
-            ).select(*out_cols)
-            versions = cat._manifest_tables(t._expected_head)
-            part_by = _detect_partition_cols(
-                _version_dir(cat.table_dir(name), versions[name])
-            )
-            t.overwrite(merged, name, part_by)
-            t.truncate(pdv, pdv_table(name))
         return t.committed_manifest
 
     return retry_on_conflict(attempt)

@@ -15,31 +15,30 @@ back into the base when it crosses size thresholds.
 ``enforce_retention`` is that policy as one idempotent call: measure
 the current committed state (file counts + bytes from the version
 directories — pure filesystem metadata, no scan), compare against a
-``RetentionPolicy``, and run only the folds that are due, each through
-its existing atomic one-manifest compaction primitive:
+``RetentionPolicy``, and run only the folds that are due:
 
-- positional deletes fold FIRST (``compact_positional_deletes``) —
-  they anchor to physical files, so they must resolve before any
-  rewrite invalidates them;
 - the streaming ledger folds to ONE row per app_id (the max batch id —
   Delta keeps exactly this, the latest ``txn`` version per appId;
   Structured Streaming batch ids are monotonic per checkpoint, so the
   max is a complete replay test) when it exceeds
   ``max_ledger_rows_per_app`` x apps — metadata-only;
-- everything REWRITE-shaped shares ONE pass: the upsert-delta fold
-  (due past ``max_side_ratio`` x base bytes or ``max_side_bytes``),
-  the key-dv fold (same thresholds), and the file-count compaction
-  (due past ``max_base_files``, repartitioned to ``target_file_bytes``)
-  all run as a single ``mor_upsert.compact_full`` rewrite + one atomic
-  commit — at 100 TB the base rewrite IS the cost, so sequential folds
-  would double or triple it.
+- everything REWRITE-shaped is ONE ``mor_upsert.fold`` call: it runs
+  when any side table (``__delta``, ``__dv``, ``__pdv``) is due past
+  ``max_side_ratio`` x base bytes and ``max_side_bytes``, or the base
+  is past ``max_base_files`` (then repartitioned to
+  ``target_file_bytes``). The fold applies EVERY non-empty side table
+  in one rewrite + one atomic commit — at 100 TB the base rewrite IS
+  the cost, so sequential folds would double or triple it, and a
+  positional delete can never be stranded by a rewrite that skipped
+  it.
 
-Reads are IDENTICAL before and after every step (each fold's own
-invariant, proven by the compaction primitives' tests and the
+Reads are IDENTICAL before and after every step: the fold rewrites the
+base with exactly the plan ``mor_upsert.read_logical`` returns (proven
+by the property test in tests/test_mor_property.py and the
 ``x_storage_retention_policy`` oracle key); the policy only changes
 the physical layout. Safe to run from a cron/maintenance thread while
-writers stream: every fold commits through the CAS-retry bracket, so
-racing batches serialize instead of losing updates.
+writers stream: every fold commits through the CAS-retry bracket, so a
+racing batch makes the fold retry and folds that batch too.
 """
 
 from __future__ import annotations
@@ -47,13 +46,13 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.txn import Catalog, _version_dir, retry_on_conflict
-from . import deletes as _deletes
 from . import mor_upsert as _mor
-from . import positional_deletes as _pdel
+from .deletes import dv_table
+from .positional_deletes import pdv_table
 
 
 @dataclass(frozen=True)
@@ -187,9 +186,10 @@ def enforce_retention(
     branch: str = "main",
 ) -> dict[str, bool]:
     """Run every maintenance fold that is DUE for ``name`` under
-    ``policy`` (see module docstring for the order and why). Returns
-    {action: ran} for observability. ``key_cols`` is required only
-    when a delta or key-dv side table exists."""
+    ``policy`` (see the module docstring). Returns {action: ran} for
+    observability; a ``fold_*`` side-table action is True when the
+    fold emptied that side table, whether or not it alone was due.
+    ``key_cols`` is required only while a delta or key-dv has rows."""
     actions = {
         "fold_positional_deletes": False,
         "fold_upsert_delta": False,
@@ -200,37 +200,18 @@ def enforce_retention(
     base = table_stats(cat, name, branch)
     if base is None:
         return actions
-
-    # Decide what is due FIRST — the pdv fold must run before ANY
-    # rewrite-shaped fold, not only before file compaction
-    # (code-review r18: a delta-only fold with a sub-threshold pdv
-    # stranded its anchors and resurrected the deleted rows).
-    delta_due = _side_due(
-        base, table_stats(cat, _mor.delta_table(name), branch), policy
-    )
-    dv_due = _side_due(
-        base, table_stats(cat, _deletes.dv_table(name), branch), policy
+    sides_due = any(
+        _side_due(base, table_stats(cat, side, branch), policy)
+        for side in (
+            _mor.delta_table(name), dv_table(name), pdv_table(name)
+        )
     )
     files_due = (
         policy.max_base_files is not None
         and base["files"] > policy.max_base_files
     )
-    pdv_stats = table_stats(cat, _pdel.pdv_table(name), branch)
-    pdv_pending = pdv_stats is not None and _pdel.has_pending_positional_deletes(
-        cat, spark, name, cat.head(branch)
-    )
-    pdv_due = _side_due(base, pdv_stats, policy)
 
-    # 1) positional deletes: fold when due by size, OR (whatever their
-    # size) whenever a base rewrite is about to run
-    if pdv_pending and (pdv_due or delta_due or dv_due or files_due):
-        actions["fold_positional_deletes"] = (
-            _pdel.compact_positional_deletes(cat, spark, name, branch)
-            is not None
-        )
-        base = table_stats(cat, name, branch)
-
-    # 2) streaming ledger (metadata-only, independent of the rewrite)
+    # streaming ledger (metadata-only, independent of the rewrite)
     if policy.max_ledger_rows_per_app is not None:
         from ..streaming.exactly_once import LEDGER_GUARD_ROWS, ledger_table
 
@@ -261,18 +242,10 @@ def enforce_retention(
             except FileNotFoundError:
                 pass
 
-    # 3) ONE combined rewrite for everything rewrite-shaped: the upsert
-    # delta fold, the key-dv fold, and the file-count compaction all
-    # cost a base rewrite, so whichever subset is due shares a single
-    # pass + a single atomic commit (mor_upsert.compact_full) — at
-    # 100 TB sequential folds would double or triple the round's
-    # dominant cost. Key-matched side tables survive a rewrite, so
-    # ordering vs the ledger/pdv steps above is free.
-    if delta_due or dv_due or files_due:
-        if (delta_due or dv_due) and not key_cols:
-            raise ValueError(
-                f"retention on {name!r}: delta/dv fold due but no key_cols"
-            )
+    # ONE fold for everything rewrite-shaped: whichever side tables or
+    # file-count debt are due share a single base rewrite + a single
+    # atomic commit, and the fold applies every non-empty side table
+    if sides_due or files_due:
         n_files = None
         if files_due:
             import math
@@ -280,52 +253,15 @@ def enforce_retention(
             n_files = max(
                 1, math.ceil(base["bytes"] / policy.target_file_bytes)
             )
-        # A positional delete can land BETWEEN the pdv fold above and
-        # this rewrite (they are separate transactions); the rewrite
-        # primitives then refuse via guard_no_pending_positional_
-        # deletes. Re-fold the fresh pdv and retry, bounded — the
-        # maintenance pass must serialize with live writers, not crash
-        # the cron job (ADVICE r18).
-        _PDV_RACE_RETRIES = 4
-        if key_cols:
-
-            def rewrite() -> bool:
-                return (
-                    _mor.compact_full(
-                        cat, spark, name, key_cols, branch, n_files=n_files
-                    )
-                    is not None
-                )
-
-        else:  # files_due only, keyless table: plain sized rewrite
-
-            def rewrite() -> bool:
-                retry_on_conflict(
-                    lambda: cat.compact_table(
-                        spark,
-                        name,
-                        target_file_bytes=policy.target_file_bytes,
-                        branch=branch,
-                    )
-                )
-                return True
-
-        for pdv_attempt in range(_PDV_RACE_RETRIES):
-            try:
-                ran = rewrite()
-                break
-            except ValueError as exc:
-                if "pending positional deletes" not in str(exc) or (
-                    pdv_attempt == _PDV_RACE_RETRIES - 1
-                ):
-                    raise
-                if (
-                    _pdel.compact_positional_deletes(cat, spark, name, branch)
-                    is not None
-                ):
-                    actions["fold_positional_deletes"] = True
-        actions["fold_upsert_delta"] = delta_due and ran
-        actions["fold_deletion_vector"] = dv_due and ran
-        actions["compact_base_files"] = files_due and ran
+        m = _mor.fold(cat, spark, name, key_cols, branch, n_files=n_files)
+        if m is not None:
+            # a side table was folded iff the fold's commit emptied it
+            new = cat._manifest_tables(m)
+            old = cat._manifest_tables(cat._manifest_parent(m))
+            folded = {t for t, v in new.items() if old.get(t) != v}
+            actions["fold_upsert_delta"] = _mor.delta_table(name) in folded
+            actions["fold_deletion_vector"] = dv_table(name) in folded
+            actions["fold_positional_deletes"] = pdv_table(name) in folded
+            actions["compact_base_files"] = files_due
 
     return actions

@@ -6046,9 +6046,10 @@ def x_storage_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 delete-file / Delta deletion-vector posture): two delete
     batches land as KEYS-ONLY commits against an untouched base
     version (at 100 TB: a GDPR batch touching 0.01% of rows commits
-    KBs, not a table rewrite), ``read_merged`` applies them as a
-    broadcast LEFT ANTI join pinned to the base scan, and
-    ``compact_deletes`` folds base-minus-dv + an emptied dv in ONE
+    KBs, not a table rewrite), the one merge-on-read reader
+    (``mor_upsert.read_logical``) applies them as a broadcast LEFT
+    ANTI join pinned to the base scan, and the one fold
+    (``mor_upsert.fold``) commits base-minus-dv + an emptied dv in ONE
     atomic manifest swap. Hash-gated rows: the merged digest after
     both deletes, the dv's own key census, and the post-compaction
     digest (must equal the merged one — a compaction that loses or
@@ -6057,6 +6058,7 @@ def x_storage_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     The emptied-dv invariant is asserted in-code (a non-empty dv
     after compaction would double-delete on the next merge)."""
     from ..operators import deletes
+    from ..operators import mor_upsert as mor
     from ..sources.txn import Catalog
 
     cat = Catalog(_scratch_dir("spark_graft_dv_") + "/wh")
@@ -6082,16 +6084,16 @@ def x_storage_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("ref", "n", "key_sum")
 
     merged = digest(
-        deletes.read_merged(cat, spark, "orders_mor", key), "merged"
+        mor.read_logical(cat, spark, "orders_mor", key), "merged"
     )
     dv_rows = digest(
         cat.read(spark, deletes.dv_table("orders_mor")), "dv"
     )
-    deletes.compact_deletes(cat, spark, "orders_mor", key)
+    mor.fold(cat, spark, "orders_mor", key)
     if _cat_rows(cat, spark, deletes.dv_table("orders_mor")) != 0:
         raise AssertionError("deletion vector not emptied by compaction")
     compacted = digest(
-        deletes.read_merged(cat, spark, "orders_mor", key), "compacted"
+        mor.read_logical(cat, spark, "orders_mor", key), "compacted"
     )
     return merged.unionByName(dv_rows).unionByName(compacted)
 
@@ -6223,10 +6225,11 @@ def x_storage_mor_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADVICE r17): its key predicate prunes upsert-inserted NEW rows
     too, which the oracle states by applying the %11 filter AFTER the
     union. Two digest generations are emitted —
-    'merged' (read through base∪delta∪dv) and 'compacted' (after
-    compact_upserts folds the delta in one atomic manifest) — and
-    must be identical, which is the compaction invariant itself; the
-    emptied delta is asserted in-code."""
+    'merged' (``mor_upsert.read_logical`` through base∪delta∪dv) and
+    'compacted' (after ``mor_upsert.fold`` folds the delta and the dv
+    in one atomic manifest) — and must be identical, which is the
+    compaction invariant itself; the emptied delta is asserted
+    in-code."""
     from ..operators import deletes as _del
     from ..operators import mor_upsert as mor
     from ..sources.txn import Catalog
@@ -6265,13 +6268,13 @@ def x_storage_mor_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(label).alias("ref"), "segment", "n", "key_sum")
 
     merged = digest(
-        mor.read_upserted(cat, spark, "dim_seg", key), "merged"
+        mor.read_logical(cat, spark, "dim_seg", key), "merged"
     )
-    mor.compact_upserts(cat, spark, "dim_seg", key)
+    mor.fold(cat, spark, "dim_seg", key)
     if _cat_rows(cat, spark, mor.delta_table("dim_seg")) != 0:
         raise AssertionError("delta not emptied by compaction")
     compacted = digest(
-        mor.read_upserted(cat, spark, "dim_seg", key), "compacted"
+        mor.read_logical(cat, spark, "dim_seg", key), "compacted"
     )
     return merged.unionByName(compacted)
 
@@ -6472,10 +6475,11 @@ def x_storage_positional_deletes(
     appended rows are born UNDELETED (asserted in-code), exactly the
     Iceberg contract; a second positional delete then prunes
     o_totalprice < 50000 across BOTH file generations. Digests are
-    emitted through the merged read and again after
-    compact_positional_deletes folds base-minus-positions + an emptied
-    pdv in ONE atomic manifest swap — both must match the oracle's
-    pure-content statement of the same deletes."""
+    emitted through the merged read (``mor_upsert.read_logical``) and
+    again after ``mor_upsert.fold`` commits base-minus-positions + an
+    emptied pdv in ONE atomic manifest swap — both must match the
+    oracle's pure-content statement of the same deletes."""
+    from ..operators import mor_upsert as mor
     from ..operators import positional_deletes as pdel
     from ..sources.txn import Catalog
 
@@ -6499,7 +6503,7 @@ def x_storage_positional_deletes(
     # positional delete removed every base F row — the invariant that
     # distinguishes positional from equality deletes
     n_f_appended = (
-        pdel.read_positional(cat, spark, "orders_pos")
+        mor.read_logical(cat, spark, "orders_pos")
         .filter((F.col("status") == "F") & (F.col("k") >= 10000000))
         .count()
     )
@@ -6518,13 +6522,13 @@ def x_storage_positional_deletes(
         ).select(F.lit(label).alias("ref"), "status", "n", "key_sum")
 
     merged = digest(
-        pdel.read_positional(cat, spark, "orders_pos"), "merged"
+        mor.read_logical(cat, spark, "orders_pos"), "merged"
     )
-    pdel.compact_positional_deletes(cat, spark, "orders_pos")
+    mor.fold(cat, spark, "orders_pos")
     if _cat_rows(cat, spark, pdel.pdv_table("orders_pos")) != 0:
         raise AssertionError("pdv not emptied by compaction")
     compacted = digest(
-        pdel.read_positional(cat, spark, "orders_pos"), "compacted"
+        mor.read_logical(cat, spark, "orders_pos"), "compacted"
     )
     return merged.unionByName(compacted)
 
@@ -6661,9 +6665,11 @@ def x_storage_retention_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     task #3): build up every kind of merge-on-read debt against one
     table — 4 exactly-once streaming micro-batch appends (tiny part
     files + 4 ledger rows), an upsert delta, a key deletion vector —
-    then run ONE ``enforce_retention`` call with eager thresholds and
-    prove reads are IDENTICAL before and after ('before'/'after'
-    digests, hash-gated against the oracle's pure-content statement).
+    then run ONE ``enforce_retention`` call with eager thresholds (the
+    delta, the dv and the file-count compaction share one
+    ``mor_upsert.fold``) and prove reads are IDENTICAL before and
+    after ('before'/'after' digests through ``mor_upsert.read_logical``,
+    hash-gated against the oracle's pure-content statement).
     In-code asserts pin the physical effects the digest can't see:
     every fold actually ran, the base file count dropped to the
     policy target, the ledger folded to one max row whose replay
@@ -6707,7 +6713,7 @@ def x_storage_retention_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def digest(label: str) -> DataFrame:
         return (
-            mor.read_upserted(cat, spark, "orders_ret", key)
+            mor.read_logical(cat, spark, "orders_ret", key)
             .groupBy("status")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),

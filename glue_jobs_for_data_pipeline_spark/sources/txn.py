@@ -1696,7 +1696,7 @@ class Catalog:
         if self._pdv_nonempty(spark, name, head):
             raise ValueError(
                 f"table {name!r} has pending positional deletes; "
-                "compact_positional_deletes() before rewriting "
+                "fold them with mor_upsert.fold() before rewriting "
                 "(a rewrite strands (file,pos) anchors)"
             )
         vdir = _version_dir(self.table_dir(name), versions[name])
@@ -1727,9 +1727,10 @@ class Catalog:
     def _pdv_nonempty(
         self, spark: SparkSession, name: str, manifest: int | None
     ) -> bool:
-        """Non-empty positional-delete side table check shared by the
-        rewrite primitives (the ``__pdv`` naming is the
-        operators/positional_deletes.py convention)."""
+        """The one pending-positional-delete check: True iff ``name``
+        has a non-empty ``__pdv`` side table in ``manifest`` (the
+        operators/positional_deletes.py naming). The rewrite
+        primitives refuse while it holds."""
         versions = self._manifest_tables(manifest)
         pdv_name = name + "__pdv"
         if pdv_name not in versions:
@@ -1765,8 +1766,8 @@ class Catalog:
         it (keep_schema_ops — same contract as appends). Pending
         POSITIONAL deletes on the table make this raise: rewriting a
         partition strands its (file,pos) anchors — fold them first
-        (compact_positional_deletes). Key-based dv/delta side tables
-        are unaffected (they match by key, not position).
+        (``mor_upsert.fold``). Key-based dv/delta side tables are
+        unaffected (they match by key, not position).
 
         Returns the commit's manifest id, or None when no partition is
         over the threshold (nothing staged, nothing published). CAS +
@@ -1780,7 +1781,7 @@ class Catalog:
         if self._pdv_nonempty(spark, name, head):
             raise ValueError(
                 f"table {name!r} has pending positional deletes; "
-                "compact_positional_deletes() before rewriting "
+                "fold them with mor_upsert.fold() before rewriting "
                 "partitions (a rewrite strands (file,pos) anchors)"
             )
         table_dir = self.table_dir(name)

@@ -1,10 +1,16 @@
-"""Merge-on-read deletion vectors (operators/deletes.py, r16)."""
+"""Merge-on-read deletion vectors (operators/deletes.py, r16), read and
+folded through the one merge-on-read core (mor_upsert.read_logical /
+mor_upsert.fold)."""
 
 from __future__ import annotations
 
 import pytest
 
-from glue_jobs_for_data_pipeline_spark.operators import deletes
+from glue_jobs_for_data_pipeline_spark.operators import (
+    deletes,
+    mor_upsert,
+    positional_deletes,
+)
 from glue_jobs_for_data_pipeline_spark.sources import txn
 
 
@@ -19,7 +25,8 @@ def cat(tmp_path):
 
 def _merged_keys(cat, spark):
     return sorted(
-        r["k"] for r in deletes.read_merged(cat, spark, "t", ("k",)).collect()
+        r["k"]
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
     )
 
 
@@ -57,7 +64,7 @@ def test_compaction_folds_dv_atomically(spark, cat):
         t.overwrite(_df(spark), "t")
     deletes.delete_where(cat, spark, "t", "k < 4", ("k",))
     before = _merged_keys(cat, spark)
-    m = deletes.compact_deletes(cat, spark, "t", ("k",))
+    m = mor_upsert.fold(cat, spark, "t", ("k",))
     # ONE manifest moved both tables (base rewritten + dv emptied)
     mf = cat.manifest()
     assert cat.head() == m
@@ -78,7 +85,7 @@ def test_compact_without_dv_is_noop(spark, cat):
         t.overwrite(_df(spark), "t")
     h = cat.head()
     # None = "nothing folded, no commit" — not a borrowed head id
-    assert deletes.compact_deletes(cat, spark, "t", ("k",)) is None
+    assert mor_upsert.fold(cat, spark, "t", ("k",)) is None
     assert cat.head() == h
 
 
@@ -89,7 +96,7 @@ def test_delete_then_read_on_branch_is_isolated(spark, cat):
     deletes.delete_where(cat, spark, "t", "k >= 5", ("k",), branch="exp")
     # main sees everything; the branch sees the delete
     assert _merged_keys(cat, spark) == list(range(10))
-    exp = deletes.read_merged(cat, spark, "t", ("k",), branch="exp")
+    exp = mor_upsert.read_logical(cat, spark, "t", ("k",), branch="exp")
     assert sorted(r["k"] for r in exp.collect()) == [0, 1, 2, 3, 4]
 
 
@@ -138,64 +145,94 @@ def test_concurrent_delete_batches_none_lost(spark, tmp_path):
     expect = {k for lo in (0, 20, 40, 60, 80) for k in range(lo, lo + 10)}
     assert dv_keys == expect  # no batch lost, none invented
     merged = {
-        r["k"] for r in deletes.read_merged(cat, spark, "t", ("k",)).collect()
+        r["k"]
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
     }
     assert merged == set(range(100)) - expect
 
 
-def test_compaction_racing_delete_resurrects_nothing(spark, tmp_path):
-    """compact_deletes retries when a delete batch lands mid-compaction
-    (its CAS loses), and the retry folds the newer dv too."""
-    import threading
-
+def _fold_with_race(cat, spark, racer: str, monkeypatch):
+    """Run one fold while ``racer`` lands between its snapshot read and
+    its commit: a key delete of k 40..44, an upsert of k 45 + insert of
+    k 99, or a positional delete of k 40..44. Returns (the fold's
+    manifest id, how many times the fold planned)."""
     from pyspark.sql import functions as F
 
-    from glue_jobs_for_data_pipeline_spark.operators import deletes
-    from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
+    hit = (F.col("k") >= 40) & (F.col("k") < 45)
+    real_logical = mor_upsert._logical
+    calls = []
 
-    cat = Catalog(str(tmp_path / "wh"))
-    with cat.transaction() as t:
-        t.overwrite(spark.range(50).select(F.col("id").alias("k")), "t")
-    deletes.delete_where(cat, spark, "t", F.col("k") < 5, ("k",))
+    def racing_logical(*args):
+        out = real_logical(*args)
+        calls.append(args)
+        if len(calls) == 1:
+            if racer == "key_delete":
+                deletes.delete_where(cat, spark, "t", hit, ("k",))
+            elif racer == "upsert":
+                mor_upsert.upsert_into(
+                    cat, spark, "t",
+                    spark.createDataFrame(
+                        [(45, "u"), (99, "u")], "k long, v string"
+                    ),
+                    ("k",),
+                )
+            else:
+                positional_deletes.delete_where_positional(
+                    cat, spark, "t", hit
+                )
+        return out
 
-    errs: list[Exception] = []
+    monkeypatch.setattr(mor_upsert, "_logical", racing_logical)
+    try:
+        return mor_upsert.fold(cat, spark, "t", ("k",)), len(calls)
+    finally:
+        monkeypatch.setattr(mor_upsert, "_logical", real_logical)
 
-    def compactor() -> None:
-        try:
-            deletes.compact_deletes(cat, spark, "t", ("k",))
-        except Exception as exc:  # noqa: BLE001
-            errs.append(exc)
 
-    def deleter() -> None:
-        try:
-            deletes.delete_where(
-                cat, spark, "t", (F.col("k") >= 40) & (F.col("k") < 45), ("k",)
+def test_compaction_racing_delete_resurrects_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A key delete, an upsert and a positional delete, each landing
+    between the fold's snapshot read and its commit: the fold's commit
+    loses its CAS, the retry re-plans from the new snapshot and folds
+    the racing write too — nothing resurrected, nothing dropped, every
+    side table empty afterwards."""
+    from pyspark.sql import functions as F
+
+    for racer in ("key_delete", "upsert", "positional_delete"):
+        cat = txn.Catalog(str(tmp_path / racer))
+        with cat.transaction() as t:
+            t.overwrite(
+                spark.range(50).select(
+                    F.col("id").alias("k"), F.lit("b").alias("v")
+                ),
+                "t",
             )
-        except Exception as exc:  # noqa: BLE001
-            errs.append(exc)
-
-    ts = [threading.Thread(target=compactor),
-          threading.Thread(target=deleter)]
-    for th in ts:
-        th.start()
-    for th in ts:
-        th.join()
-    assert not errs, errs
-    # whatever the interleaving, the LOGICAL state is exact: both
-    # delete batches applied, nothing resurrected
-    merged = {
-        r["k"] for r in deletes.read_merged(cat, spark, "t", ("k",)).collect()
-    }
-    assert merged == set(range(5, 40)) | {45, 46, 47, 48, 49}
-    # and a final compaction settles to (clean base, empty dv)
-    deletes.compact_deletes(cat, spark, "t", ("k",))
-    assert cat.read(spark, deletes.dv_table("t")).count() == 0
-    base_rows = {r["k"] for r in cat.read(spark, "t").collect()}
-    assert base_rows == merged
+        deletes.delete_where(cat, spark, "t", F.col("k") < 5, ("k",))
+        mor_upsert.upsert_into(
+            cat, spark, "t",
+            spark.createDataFrame([(7, "x")], "k long, v string"), ("k",),
+        )
+        m, plans = _fold_with_race(cat, spark, racer, monkeypatch)
+        assert plans == 2, racer  # lost the CAS once, then folded
+        want = {k: "b" for k in range(5, 50)}
+        want[7] = "x"
+        if racer == "upsert":
+            want.update({45: "u", 99: "u"})
+        else:
+            for k in range(40, 45):
+                del want[k]
+        assert {
+            r["k"]: r["v"] for r in cat.read(spark, "t").collect()
+        } == want, racer
+        assert cat.head() == m
+        for side in ("t__delta", "t__dv", "t__pdv"):
+            if side in cat.manifest():
+                assert cat.read(spark, side).count() == 0, (racer, side)
 
 
 def test_delete_returns_its_own_commit_manifest(spark, cat):
-    """delete_where/compact_deletes report the manifest THEIR commit
+    """delete_where/fold report the manifest THEIR commit
     published (ADVICE r16) — verifiable because that manifest's diff
     vs its parent must contain exactly the tables they staged."""
     with cat.transaction() as t:
@@ -204,18 +241,18 @@ def test_delete_returns_its_own_commit_manifest(spark, cat):
     assert deletes.dv_table("t") in cat._manifest_tables(m)
     parent = cat._manifest_parent(m)
     assert deletes.dv_table("t") not in cat._manifest_tables(parent)
-    m2 = deletes.compact_deletes(cat, spark, "t", ("k",))
+    m2 = mor_upsert.fold(cat, spark, "t", ("k",))
     assert cat._manifest_tables(m2)["t"] > cat._manifest_tables(m)["t"]
 
 
-def test_read_merged_pins_one_snapshot_across_compaction(
+def test_read_logical_pins_one_snapshot_across_fold(
     spark, cat, monkeypatch
 ):
-    """A compaction landing BETWEEN read_merged's base read and its dv
+    """A fold landing BETWEEN read_logical's base read and its dv
     read must not hand the reader (old base, emptied dv) — that
-    resurrects every compacted delete (ADVICE r16 high). The injection
-    runs compact_deletes inside the first read_asof call; the pinned
-    snapshot must still resolve the pre-compaction (base, dv) pair."""
+    resurrects every folded delete (ADVICE r16 high). The injection
+    runs a fold inside the first read_asof call; the pinned snapshot
+    must still resolve the pre-fold (base, dv) pair."""
     with cat.transaction() as t:
         t.overwrite(_df(spark), "t")
     deletes.delete_where(cat, spark, "t", "k < 4", ("k",))
@@ -226,11 +263,11 @@ def test_read_merged_pins_one_snapshot_across_compaction(
     def racy_read_asof(self, spark_, name, manifest):
         df = real_read_asof(self, spark_, name, manifest)
         if not fired["done"]:
-            fired["done"] = True  # before re-entering via compaction
-            deletes.compact_deletes(cat, spark_, "t", ("k",))
+            fired["done"] = True  # before re-entering via the fold
+            mor_upsert.fold(cat, spark_, "t", ("k",))
         return df
 
     monkeypatch.setattr(txn.Catalog, "read_asof", racy_read_asof)
-    merged = deletes.read_merged(cat, spark, "t", ("k",))
+    merged = mor_upsert.read_logical(cat, spark, "t", ("k",))
     assert sorted(r["k"] for r in merged.collect()) == [4, 5, 6, 7, 8, 9]
     assert fired["done"]  # the race actually happened

@@ -20,7 +20,7 @@ def _df(spark, rows):
 def _state(cat, spark):
     return {
         r["k"]: r["v"]
-        for r in mor_upsert.read_upserted(cat, spark, "t", ("k",)).collect()
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
     }
 
 
@@ -60,7 +60,7 @@ def test_compaction_folds_delta_atomically(spark, cat):
         cat, spark, "t", _df(spark, [(1, "A"), (7, "g")]), ("k",)
     )
     before = _state(cat, spark)
-    m = mor_upsert.compact_upserts(cat, spark, "t", ("k",))
+    m = mor_upsert.fold(cat, spark, "t", ("k",))
     assert cat.head() == m
     assert _state(cat, spark) == before == {1: "A", 2: "b", 3: "c", 7: "g"}
     assert cat.read(spark, mor_upsert.delta_table("t")).count() == 0
@@ -80,8 +80,8 @@ def test_delete_beats_stale_upsert(spark, cat):
     mor_upsert.upsert_into(cat, spark, "t", _df(spark, [(2, "B2")]), ("k",))
     deletes.delete_where(cat, spark, "t", "k = 2", ("k",))
     assert _state(cat, spark) == {1: "a", 3: "c"}  # dv applies last
-    # and survives upsert compaction
-    mor_upsert.compact_upserts(cat, spark, "t", ("k",))
+    # and survives the fold
+    mor_upsert.fold(cat, spark, "t", ("k",))
     assert _state(cat, spark) == {1: "a", 3: "c"}
 
 
@@ -121,13 +121,13 @@ def test_concurrent_upsert_batches_none_lost(spark, tmp_path):
 
 def test_upsert_into_absent_table_is_initial_load(spark, cat):
     """The first upsert IS the initial load — not a delta-only black
-    hole that read_upserted/compact_upserts cannot resolve."""
+    hole that read_logical/fold cannot resolve."""
     m = mor_upsert.upsert_into(
         cat, spark, "t", _df(spark, [(1, "a"), (2, "b")]), ("k",)
     )
     assert m == cat.head()
     assert _state(cat, spark) == {1: "a", 2: "b"}
-    assert mor_upsert.compact_upserts(cat, spark, "t", ("k",)) is None
+    assert mor_upsert.fold(cat, spark, "t", ("k",)) is None
 
 
 def test_upsert_resurrects_deleted_key(spark, cat):
@@ -147,42 +147,21 @@ def test_upsert_resurrects_deleted_key(spark, cat):
 
 
 def test_resurrection_is_compaction_order_independent(spark, cat):
-    """delete k -> upsert k: the logical state must be identical no
-    matter which compaction runs first (ADVICE r17: before the dv
-    purge, compact_deletes resurrected the stale delta row while
-    compact_upserts-then-compact_deletes dropped the key forever)."""
-
-    def build(root):
-        c = txn.Catalog(str(root))
-        with c.transaction() as t:
-            t.overwrite(_df(spark, [(1, "a"), (2, "b")]), "t")
-        deletes.delete_where(c, spark, "t", "k = 2", ("k",))
-        mor_upsert.upsert_into(c, spark, "t", _df(spark, [(2, "B2")]), ("k",))
-        return c
-
-    import tempfile
-
+    """delete k -> upsert k: the logical state must survive the fold
+    unchanged (ADVICE r17: before the dv purge, folding the dv alone
+    resurrected the stale delta row while folding the delta first
+    dropped the key forever). The one fold applies delta and dv in the
+    reader's order, and folding again is a no-op."""
+    with cat.transaction() as t:
+        t.overwrite(_df(spark, [(1, "a"), (2, "b")]), "t")
+    deletes.delete_where(cat, spark, "t", "k = 2", ("k",))
+    mor_upsert.upsert_into(cat, spark, "t", _df(spark, [(2, "B2")]), ("k",))
     want = {1: "a", 2: "B2"}
-    with tempfile.TemporaryDirectory() as d1:
-        c = build(d1)
-        deletes.compact_deletes(c, spark, "t", ("k",))
-        assert {
-            r["k"]: r["v"]
-            for r in mor_upsert.read_upserted(c, spark, "t", ("k",)).collect()
-        } == want
-        mor_upsert.compact_upserts(c, spark, "t", ("k",))
-        assert {
-            r["k"]: r["v"]
-            for r in mor_upsert.read_upserted(c, spark, "t", ("k",)).collect()
-        } == want
-    with tempfile.TemporaryDirectory() as d2:
-        c = build(d2)
-        mor_upsert.compact_upserts(c, spark, "t", ("k",))
-        deletes.compact_deletes(c, spark, "t", ("k",))
-        assert {
-            r["k"]: r["v"]
-            for r in mor_upsert.read_upserted(c, spark, "t", ("k",)).collect()
-        } == want
+    assert _state(cat, spark) == want
+    assert mor_upsert.fold(cat, spark, "t", ("k",)) is not None
+    assert _state(cat, spark) == want
+    assert {r["k"]: r["v"] for r in cat.read(spark, "t").collect()} == want
+    assert mor_upsert.fold(cat, spark, "t", ("k",)) is None
 
 
 def test_delete_where_sees_upserted_values(spark, cat):
@@ -202,7 +181,7 @@ def test_delete_where_sees_upserted_values(spark, cat):
 
 def test_evolve_upserted_schema_covers_delta(spark, cat):
     """Schema evolution over a MoR table with a live delta: the op
-    list must replay over the delta side table too, or read_upserted's
+    list must replay over the delta side table too, or read_logical's
     unionByName explodes (ADVICE r17)."""
     _seed(cat, spark)
     mor_upsert.upsert_into(cat, spark, "t", _df(spark, [(2, "B2")]), ("k",))
@@ -212,7 +191,7 @@ def test_evolve_upserted_schema_covers_delta(spark, cat):
     )
     rows = {
         r["k"]: (r["v"], r["src"])
-        for r in mor_upsert.read_upserted(cat, spark, "t", ("k",)).collect()
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
     }
     assert rows == {
         1: ("a", "legacy"), 2: ("B2", "legacy"), 3: ("c", "legacy")
@@ -222,10 +201,10 @@ def test_evolve_upserted_schema_covers_delta(spark, cat):
         [(9, "new", "cdc")], "k long, v string, src string"
     )
     mor_upsert.upsert_into(cat, spark, "t", post, ("k",))
-    mor_upsert.compact_upserts(cat, spark, "t", ("k",))
+    mor_upsert.fold(cat, spark, "t", ("k",))
     rows = {
         r["k"]: (r["v"], r["src"])
-        for r in mor_upsert.read_upserted(cat, spark, "t", ("k",)).collect()
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
     }
     assert rows[9] == ("new", "cdc") and rows[1] == ("a", "legacy")
 
@@ -242,22 +221,22 @@ def test_upsert_keys_only_batch(spark, cat):
     )
     got = sorted(
         r["k"]
-        for r in mor_upsert.read_upserted(cat, spark, "t", ("k",)).collect()
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
     )
     assert got == [0, 1, 2, 7]
 
 
-def test_compact_deletes_purges_delta_in_same_commit(spark, cat):
-    """upsert k -> delete_where matching k -> compact_deletes: the
-    standalone dv fold must ALSO purge k from the __delta side table
-    in the same atomic commit — emptying the dv alone lets
-    read_upserted re-surface k from the untouched delta (ADVICE r18:
-    observed {1:a, 2:zap, 3:c} after compacting a delete of k=2)."""
+def test_fold_purges_delta_and_dv_in_same_commit(spark, cat):
+    """upsert k -> delete_where matching k -> fold: the fold must
+    empty the dv AND the __delta side table in the same atomic commit
+    — emptying the dv alone lets the reader re-surface k from the
+    untouched delta (ADVICE r18: observed {1:a, 2:zap, 3:c} after
+    folding a delete of k=2)."""
     _seed(cat, spark)  # {1: a, 2: b, 3: c}
     mor_upsert.upsert_into(cat, spark, "t", _df(spark, [(2, "zap")]), ("k",))
     deletes.delete_where(cat, spark, "t", "v = 'zap'", ("k",))
     assert _state(cat, spark) == {1: "a", 3: "c"}
-    m = deletes.compact_deletes(cat, spark, "t", ("k",))
+    m = mor_upsert.fold(cat, spark, "t", ("k",))
     assert cat.head() == m
     assert _state(cat, spark) == {1: "a", 3: "c"}  # no resurrection
     # the delta purge and the dv reset landed in ONE manifest
@@ -271,22 +250,23 @@ def test_compact_deletes_purges_delta_in_same_commit(spark, cat):
         cat, spark, "t", _df(spark, [(1, "A1"), (5, "e")]), ("k",)
     )
     deletes.delete_where(cat, spark, "t", "k = 5", ("k",))
-    deletes.compact_deletes(cat, spark, "t", ("k",))
+    mor_upsert.fold(cat, spark, "t", ("k",))
     assert _state(cat, spark) == {1: "A1", 3: "c"}
 
 
-def test_compact_deletes_skips_rewrite_of_an_empty_delta(spark, cat):
-    """An EMPTY __delta table must not be rewritten by compact_deletes
-    — delta ANTI dv is still empty, and the anti-join write job is
-    avoidable fixed per-commit cost (ADVICE r19). The dv fold itself
-    and the logical state are unaffected."""
+def test_fold_skips_rewrite_of_an_empty_delta(spark, cat):
+    """An EMPTY __delta table must not be rewritten by the fold — its
+    footers count 0 rows, so the plan skips it and the commit leaves
+    its version alone (ADVICE r19: the write job is avoidable fixed
+    per-commit cost). The dv fold and the logical state are
+    unaffected."""
     _seed(cat, spark)  # {1: a, 2: b, 3: c}
     mor_upsert.upsert_into(cat, spark, "t", _df(spark, [(2, "B2")]), ("k",))
     # fold the delta: it is now an EMPTY (truncate-staged) side table
-    mor_upsert.compact_upserts(cat, spark, "t", ("k",))
+    mor_upsert.fold(cat, spark, "t", ("k",))
     delta_v = cat.manifest()[mor_upsert.delta_table("t")]
     deletes.delete_where(cat, spark, "t", "k = 3", ("k",))
-    m = deletes.compact_deletes(cat, spark, "t", ("k",))
+    m = mor_upsert.fold(cat, spark, "t", ("k",))
     assert m is not None
     # the empty delta's version did NOT move in the fold's commit
     assert cat._manifest_tables(m)[mor_upsert.delta_table("t")] == delta_v

@@ -1,10 +1,15 @@
-"""Position-based merge-on-read deletes (operators/positional_deletes.py, r18)."""
+"""Position-based merge-on-read deletes (operators/positional_deletes.py,
+r18), read and folded through the one merge-on-read core
+(mor_upsert.read_logical / mor_upsert.fold)."""
 
 from __future__ import annotations
 
 import pytest
 
-from glue_jobs_for_data_pipeline_spark.operators import positional_deletes as pd_
+from glue_jobs_for_data_pipeline_spark.operators import mor_upsert
+from glue_jobs_for_data_pipeline_spark.operators import (
+    positional_deletes as pd_,
+)
 from glue_jobs_for_data_pipeline_spark.sources import txn
 
 
@@ -25,7 +30,7 @@ def _seed(cat, spark, n=10):
 
 def _keys(cat, spark):
     return sorted(
-        r["k"] for r in pd_.read_positional(cat, spark, "t").collect()
+        r["k"] for r in mor_upsert.read_logical(cat, spark, "t").collect()
     )
 
 
@@ -54,7 +59,7 @@ def test_positional_delete_hits_exact_duplicate_occurrences(spark, cat):
     pd_.delete_where_positional(cat, spark, "t", "v = 'zap'")
     rows = sorted(
         (r["k"], r["v"])
-        for r in pd_.read_positional(cat, spark, "t").collect()
+        for r in mor_upsert.read_logical(cat, spark, "t").collect()
     )
     assert rows == [(1, "keep"), (2, "keep")]
 
@@ -79,7 +84,7 @@ def test_compaction_folds_pdv_atomically(spark, cat):
     _seed(cat, spark, n=8)
     pd_.delete_where_positional(cat, spark, "t", "k >= 6")
     before = _keys(cat, spark)
-    m = pd_.compact_positional_deletes(cat, spark, "t")
+    m = mor_upsert.fold(cat, spark, "t")
     assert cat.head() == m
     assert _keys(cat, spark) == before == [0, 1, 2, 3, 4, 5]
     assert cat.read(spark, pd_.pdv_table("t")).count() == 0
@@ -92,7 +97,7 @@ def test_compaction_folds_pdv_atomically(spark, cat):
     assert old[pd_.pdv_table("t")] < new[pd_.pdv_table("t")]
     # no-op when nothing pending: returns None, publishes no commit
     head = cat.head()
-    assert pd_.compact_positional_deletes(cat, spark, "t") is None
+    assert mor_upsert.fold(cat, spark, "t") is None
     assert cat.head() == head
 
 
@@ -101,7 +106,7 @@ def test_positional_delete_after_compaction_round(spark, cat):
     new base version's files."""
     _seed(cat, spark, n=6)
     pd_.delete_where_positional(cat, spark, "t", "k = 0")
-    pd_.compact_positional_deletes(cat, spark, "t")
+    mor_upsert.fold(cat, spark, "t")
     pd_.delete_where_positional(cat, spark, "t", "k = 5")
     assert _keys(cat, spark) == [1, 2, 3, 4]
 
@@ -127,12 +132,12 @@ def test_concurrent_positional_delete_batches_none_lost(spark, tmp_path):
         th.join()
     assert not errs, errs
     got = sorted(
-        r["k"] for r in pd_.read_positional(cat, spark, "t").collect()
+        r["k"] for r in mor_upsert.read_logical(cat, spark, "t").collect()
     )
     assert got == [k for k in range(40) if k not in (3, 17, 29)]
 
 
-def test_read_positional_with_schema_evolution(spark, cat):
+def test_positional_read_with_schema_evolution(spark, cat):
     """Schema ops replay over the positional scan: positions are
     physical, the evolved schema is logical — both compose."""
     _seed(cat, spark, n=4)
@@ -141,7 +146,7 @@ def test_read_positional_with_schema_evolution(spark, cat):
         {"op": "rename", "old": "grp", "new": "bucket"},
         {"op": "widen", "col": "k", "type": "decimal(20,0)"},
     ])
-    df = pd_.read_positional(cat, spark, "t")
+    df = mor_upsert.read_logical(cat, spark, "t")
     assert df.columns == ["k", "bucket"]
     assert dict(df.dtypes)["k"] == "decimal(20,0)"
     assert sorted(int(r["k"]) for r in df.collect()) == [0, 1, 3]
@@ -149,7 +154,7 @@ def test_read_positional_with_schema_evolution(spark, cat):
     pd_.delete_where_positional(cat, spark, "t", "bucket = '0'")
     assert sorted(
         int(r["k"])
-        for r in pd_.read_positional(cat, spark, "t").collect()
+        for r in mor_upsert.read_logical(cat, spark, "t").collect()
     ) == [1]
 
 
@@ -167,17 +172,17 @@ def test_anchor_survives_versioned_warehouse_root(spark, tmp_path):
         )
     pd_.delete_where_positional(cat, spark, "t", "k % 2 = 0")
     assert sorted(
-        r["k"] for r in pd_.read_positional(cat, spark, "t").collect()
+        r["k"] for r in mor_upsert.read_logical(cat, spark, "t").collect()
     ) == [1, 3, 5]
     # an append hard-links the base files into a NEW version dir; the
     # recorded anchors must still resolve against the linked files
     with cat.transaction() as t:
         t.append(spark.createDataFrame([(100,)], "k long"), "t")
     assert sorted(
-        r["k"] for r in pd_.read_positional(cat, spark, "t").collect()
+        r["k"] for r in mor_upsert.read_logical(cat, spark, "t").collect()
     ) == [1, 3, 5, 100]
     # and the fold applies them, not silently no-ops
-    pd_.compact_positional_deletes(cat, spark, "t")
+    mor_upsert.fold(cat, spark, "t")
     assert sorted(
         r["k"] for r in cat.read(spark, "t").collect()
     ) == [1, 3, 5, 100]
@@ -215,16 +220,16 @@ def test_anchor_is_relative_to_the_scans_version_dir(spark, tmp_path):
     anchors = [r["file"] for r in cat.read(spark, "t__pdv").collect()]
     assert anchors and all(a.startswith("p=") for a in anchors)
     assert sorted(
-        r["k"] for r in pd_.read_positional(cat, spark, "t").collect()
+        r["k"] for r in mor_upsert.read_logical(cat, spark, "t").collect()
     ) == [0, 1, 2, 3, 4, 5]
     # anchors survive a hard-linked append (same relative paths)
     with cat.transaction() as t:
         t.append(spark.createDataFrame([(100, 1)], "k long, p long"), "t")
     assert sorted(
-        r["k"] for r in pd_.read_positional(cat, spark, "t").collect()
+        r["k"] for r in mor_upsert.read_logical(cat, spark, "t").collect()
     ) == [0, 1, 2, 3, 4, 5, 100]
     # and the fold applies them against the real files
-    pd_.compact_positional_deletes(cat, spark, "t")
+    mor_upsert.fold(cat, spark, "t")
     assert sorted(
         r["k"] for r in cat.read(spark, "t").collect()
     ) == [0, 1, 2, 3, 4, 5, 100]

@@ -30,7 +30,7 @@ def _seed(cat, spark, n=20):
 def _state(cat, spark):
     return {
         r["k"]: r["v"]
-        for r in mor_upsert.read_upserted(cat, spark, "t", ("k",)).collect()
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
     }
 
 
@@ -76,9 +76,10 @@ def test_due_folds_run_and_reads_unchanged(spark, cat):
 
 
 def test_positional_fold_precedes_base_compaction(spark, cat):
-    """A pending pdv + a due base compaction: the policy folds the
-    positional deletes FIRST — a plain rewrite would strand their
-    anchors and resurrect the rows."""
+    """A pending pdv + a due base compaction on a keyless table: the
+    policy's one fold applies the positional deletes in the same
+    rewrite — a plain rewrite would strand their anchors and resurrect
+    the rows."""
     _seed(cat, spark, n=30)
     # many appends -> many small files
     for i in range(6):
@@ -101,7 +102,7 @@ def test_positional_fold_precedes_base_compaction(spark, cat):
     actions = retention.enforce_retention(cat, spark, "t", policy=policy)
     assert actions["compact_base_files"]
     got = sorted(
-        r["k"] for r in pdel.read_positional(cat, spark, "t").collect()
+        r["k"] for r in mor_upsert.read_logical(cat, spark, "t").collect()
     )
     assert got == expect
     stats = retention.table_stats(cat, "t")
@@ -165,7 +166,7 @@ def test_fold_ledger_minimal_is_noop(spark, cat):
     assert retention.fold_ledger(cat, spark, "absent") is None
 
 
-def test_compact_full_is_one_commit_one_rewrite(spark, cat):
+def test_fold_is_one_commit_one_rewrite(spark, cat):
     """Delta AND dv fold in ONE manifest commit, and the base version
     advances exactly once (the single-rewrite contract retention
     relies on at scale)."""
@@ -178,7 +179,7 @@ def test_compact_full_is_one_commit_one_rewrite(spark, cat):
     deletes.delete_where(cat, spark, "t", "k = 2", ("k",))
     before = _state(cat, spark)
     base_v_before = cat.manifest()["t"]
-    m = mor_upsert.compact_full(cat, spark, "t", ("k",))
+    m = mor_upsert.fold(cat, spark, "t", ("k",))
     assert m == cat.head()
     assert _state(cat, spark) == before
     # one commit emptied BOTH side tables and bumped base ONCE
@@ -189,16 +190,17 @@ def test_compact_full_is_one_commit_one_rewrite(spark, cat):
     assert cat.read(spark, mor_upsert.delta_table("t")).count() == 0
     assert cat.read(spark, deletes.dv_table("t")).count() == 0
     # nothing left to fold
-    assert mor_upsert.compact_full(cat, spark, "t", ("k",)) is None
+    assert mor_upsert.fold(cat, spark, "t", ("k",)) is None
     # n_files-only invocation still rewrites (file sizing)
-    m2 = mor_upsert.compact_full(cat, spark, "t", ("k",), n_files=1)
+    m2 = mor_upsert.fold(cat, spark, "t", ("k",), n_files=1)
     assert m2 is not None
     assert retention.table_stats(cat, "t")["files"] == 1
     assert _state(cat, spark) == before
 
 
 def test_mor_folds_preserve_partition_layout(spark, cat):
-    """Every MoR compaction rewrite keeps the base's col=value layout
+    """Every MoR fold keeps the base's col=value layout, with and
+    without a repartition
     (r18: a fold that flattened it broke partition pruning for every
     later reader)."""
     from glue_jobs_for_data_pipeline_spark.sources.txn import (
@@ -221,7 +223,7 @@ def test_mor_folds_preserve_partition_layout(spark, cat):
         ("k",),
     )
     deletes.delete_where(cat, spark, "t", "k = 5", ("k",))
-    mor_upsert.compact_full(cat, spark, "t", ("k",))
+    mor_upsert.fold(cat, spark, "t", ("k",))
 
     def layout():
         return _detect_partition_cols(
@@ -230,21 +232,21 @@ def test_mor_folds_preserve_partition_layout(spark, cat):
 
     assert layout() == ("p",)
     pdel.delete_where_positional(cat, spark, "t", "k = 7")
-    pdel.compact_positional_deletes(cat, spark, "t")
+    mor_upsert.fold(cat, spark, "t")
     assert layout() == ("p",)
     deletes.delete_where(cat, spark, "t", "k = 8", ("k",))
-    deletes.compact_deletes(cat, spark, "t", ("k",))
+    mor_upsert.fold(cat, spark, "t", ("k",))
     assert layout() == ("p",)
     mor_upsert.upsert_into(
         cat, spark, "t",
         spark.createDataFrame([(2, 2, "y")], "k long, p int, v string"),
         ("k",),
     )
-    mor_upsert.compact_upserts(cat, spark, "t", ("k",))
+    mor_upsert.fold(cat, spark, "t", ("k",), n_files=2)
     assert layout() == ("p",)
     got = {
         r["k"]: r["v"]
-        for r in mor_upsert.read_upserted(cat, spark, "t", ("k",)).collect()
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
     }
     assert got[1] == "x" and got[2] == "y"
     assert 5 not in got and 7 not in got and 8 not in got
@@ -253,28 +255,19 @@ def test_mor_folds_preserve_partition_layout(spark, cat):
 
 def test_pdv_folds_before_any_rewrite_even_below_threshold(spark, cat):
     """code-review r18: a delta-only fold with a tiny (sub-threshold)
-    pdv pending must fold the pdv FIRST — otherwise the rewrite
-    strands its anchors and resurrects the deleted rows. The rewrite
-    primitives themselves also refuse while a pdv is pending."""
+    pdv pending must fold the pdv in the same rewrite — otherwise the
+    rewrite strands its anchors and resurrects the deleted rows. The
+    catalog's own rewrite primitive refuses while a pdv is pending."""
     _seed(cat, spark)
     mor_upsert.upsert_into(
         cat, spark, "t",
         spark.createDataFrame([(1, "x")], "k long, v string"), ("k",),
     )
     pdel.delete_where_positional(cat, spark, "t", "k = 2")
-    # positional deletes are their own read surface (base physical
-    # rows); the MoR logical state folds them in only after the fold
-    assert 2 not in {
-        r["k"] for r in pdel.read_positional(cat, spark, "t").collect()
-    }
-    # direct rewrite primitives refuse while the pdv is pending
-    with pytest.raises(ValueError, match="positional deletes"):
-        mor_upsert.compact_full(cat, spark, "t", ("k",))
-    with pytest.raises(ValueError, match="positional deletes"):
-        mor_upsert.compact_upserts(cat, spark, "t", ("k",))
-    with pytest.raises(ValueError, match="positional deletes"):
+    with pytest.raises(ValueError, match="mor_upsert.fold"):
         cat.compact_table(spark, "t")
-    # policy: delta due by size, pdv below threshold — folds pdv first
+    # policy: delta due by size, pdv below threshold — one fold
+    # applies both
     policy = retention.RetentionPolicy(
         max_side_bytes=1, max_side_ratio=None, max_base_files=None,
         max_ledger_rows_per_app=None,
@@ -289,6 +282,32 @@ def test_pdv_folds_before_any_rewrite_even_below_threshold(spark, cat):
     # resurrection of k=2 by the delta rewrite
     assert after[1] == "x" and 2 not in after
     assert len(after) == 19  # 20 seeded - 1 deleted (upsert hit k=1)
+
+
+def test_read_logical_before_retention_equals_read_after(spark, cat):
+    """upsert_into, then delete_where_positional on a row with no delta
+    entry: the logical read BEFORE retention must already be the state
+    retention commits. A reader that applied the delta but ignored the
+    pending pdv still showed the positionally deleted row until a fold
+    removed it."""
+    _seed(cat, spark)
+    mor_upsert.upsert_into(
+        cat, spark, "t",
+        spark.createDataFrame([(1, "x"), (30, "new")], "k long, v string"),
+        ("k",),
+    )
+    pdel.delete_where_positional(cat, spark, "t", "k = 3")
+    before = sorted(
+        tuple(r)
+        for r in mor_upsert.read_logical(cat, spark, "t", ("k",)).collect()
+    )
+    actions = retention.enforce_retention(
+        cat, spark, "t", ("k",), policy=EAGER
+    )
+    assert actions["fold_upsert_delta"] and actions["fold_positional_deletes"]
+    after = sorted(tuple(r) for r in cat.read(spark, "t").collect())
+    assert before == after
+    assert (3, "3") not in before and (1, "x") in before
 
 
 def test_constraints_bind_mor_upserts(spark, cat):
@@ -321,7 +340,7 @@ def test_constraints_bind_mor_upserts(spark, cat):
     with pytest.raises(ConstraintViolationError, match="__delta"):
         cat.add_constraint(spark, "t", "no_xx", "v <> 'xx'")
     # compaction still possible (no violating rows ever landed)
-    assert mor_upsert.compact_full(cat, spark, "t", ("k",)) is not None
+    assert mor_upsert.fold(cat, spark, "t", ("k",)) is not None
 
 
 def test_retention_is_branch_aware(spark, cat):
@@ -342,7 +361,7 @@ def test_retention_is_branch_aware(spark, cat):
     assert cat.head() == main_head  # main untouched
     exp_state = {
         r["k"]: r["v"]
-        for r in mor_upsert.read_upserted(
+        for r in mor_upsert.read_logical(
             cat, spark, "t", ("k",), branch="exp"
         ).collect()
     }
@@ -362,40 +381,3 @@ def test_delta_fold_requires_key_cols(spark, cat):
     )
     with pytest.raises(ValueError, match="key_cols"):
         retention.enforce_retention(cat, spark, "t", policy=EAGER)
-
-
-def test_rewrite_retries_when_positional_delete_races_the_fold(
-    spark, cat, monkeypatch
-):
-    """A positional delete landing between the pdv fold and the
-    combined rewrite (separate transactions) made compact_full raise
-    the pending-pdv guard and crash the maintenance pass (ADVICE r18
-    — the docstring promises 'safe to run from cron while writers
-    stream'). enforce_retention must catch the guard, re-fold the
-    fresh pdv, and retry the rewrite."""
-    _seed(cat, spark)
-    mor_upsert.upsert_into(
-        cat, spark, "t",
-        spark.createDataFrame([(1, "x"), (25, "new")], "k long, v string"),
-        ("k",),
-    )
-    real_compact_full = mor_upsert.compact_full
-    raced = {"done": False}
-
-    def racing_compact_full(*args, **kwargs):
-        if not raced["done"]:
-            raced["done"] = True
-            # the racing writer: a positional delete lands just before
-            # the rewrite commits -> the guard inside trips
-            pdel.delete_where_positional(cat, spark, "t", "k = 3")
-        return real_compact_full(*args, **kwargs)
-
-    monkeypatch.setattr(retention._mor, "compact_full", racing_compact_full)
-    actions = retention.enforce_retention(
-        cat, spark, "t", key_cols=("k",), policy=EAGER
-    )
-    assert actions["fold_upsert_delta"]
-    assert actions["fold_positional_deletes"]  # the mid-pass re-fold
-    state = _state(cat, spark)
-    assert state[1] == "x" and state[25] == "new" and 3 not in state
-    assert not pdel.has_pending_positional_deletes(cat, spark, "t", cat.head())

@@ -1556,6 +1556,7 @@ def test_compact_partitions_refuses_pending_positional_deletes(
     spark, tmp_path
 ):
     from glue_jobs_for_data_pipeline_spark.operators import (
+        mor_upsert,
         positional_deletes as pdel,
     )
 
@@ -1564,7 +1565,7 @@ def test_compact_partitions_refuses_pending_positional_deletes(
     with pytest.raises(ValueError, match="positional deletes"):
         cat.compact_partitions(spark, "t", max_files_per_partition=4)
     # folding them first unblocks
-    pdel.compact_positional_deletes(cat, spark, "t")
+    mor_upsert.fold(cat, spark, "t")
     assert cat.compact_partitions(spark, "t", max_files_per_partition=4)
     got = sorted(r["k"] for r in cat.read(spark, "t").collect())
     assert 5 not in got and len(got) == 34

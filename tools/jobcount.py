@@ -7,8 +7,10 @@ text (guide §1.5: job groups make per-query jobs attributable).
 
 Each key runs TWICE: the first invocation pays per-process staging
 side effects (stage caches, fixture writes) outside the probe; the
-second runs inside a job group and the group's job-id count is
-reported — the steady-state per-invocation job bill.
+second runs inside a job group and the group's jobs are reported by
+final status — the steady-state per-invocation job bill. The probe
+session retains up to ``_RETAINED_JOBS`` jobs, so a large query is not
+undercounted by the status tracker's default retention of 1000.
 
 Usage: python tools/jobcount.py [--sf DIR] key ...
 """
@@ -17,10 +19,13 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from glue_jobs_for_data_pipeline_spark.session import get_spark  # noqa: E402
+
+_RETAINED_JOBS = 100000
 
 
 def main() -> None:
@@ -33,11 +38,15 @@ def main() -> None:
 
     import __spark_entry__ as e
 
-    spark = get_spark("jobcount")
+    spark = get_spark(
+        "jobcount",
+        extra_conf={"spark.ui.retainedJobs": str(_RETAINED_JOBS)},
+    )
     qs = e.queries()
     from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches
 
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
     for k in keys:
         # staging side effects land here, outside the probe
         qs[k](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -48,11 +57,20 @@ def main() -> None:
             qs[k](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-            n = len(sc.statusTracker().getJobIdsForGroup(group))
+            jobs = tracker.getJobIdsForGroup(group)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         release_caches()
-        print(f"{k}: {n} jobs", flush=True)
+        status = Counter(
+            str(info.status) if info is not None else "UNKNOWN"
+            for info in map(tracker.getJobInfo, jobs)
+        )
+        ok = status.pop("SUCCEEDED", 0)
+        failed = status.pop("FAILED", 0)
+        other = "".join(
+            f", {n} {s.lower()}" for s, n in sorted(status.items())
+        )
+        print(f"{k}: {ok} jobs, {failed} failed{other}", flush=True)
 
 
 if __name__ == "__main__":
